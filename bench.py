@@ -104,11 +104,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from lambda_lakehouse_spark.registry import (  # noqa: E402
-    load_all,
-    load_queue,
-    load_staged,
-)
+from lambda_lakehouse_spark.registry import load_all  # noqa: E402
 from lambda_lakehouse_spark.session import get_spark  # noqa: E402
 
 # Queries whose timing includes one-time model TRAINING (k-means Lloyd
@@ -198,14 +194,7 @@ BAND_MAX: dict[str, float] = {
 
 
 def headline_names() -> list[str]:
-    # bench=True on a STAGED query is honored too (round-11 verdict,
-    # demand 4): a staged query is pytest-oracle-certified, and its
-    # cost story should start accruing in the round artifact it is
-    # built in, not one round later when it graduates —
-    # dedup_simhash64_hamming_pairs (the 100 TB-discriminating SimHash
-    # variant) is the first such entry.
-    registry = {**load_all(), **load_staged()}
-    flagged = sorted(n for n, q in registry.items() if q.bench)
+    flagged = sorted(n for n, q in load_all().items() if q.bench)
     ordered = [n for n in LEGACY_ORDER if n in flagged]
     ordered += [n for n in flagged if n not in ordered]
     return ordered
@@ -330,9 +319,7 @@ def run_single(name: str, sf_dir: str) -> None:
                 )
         q = _ControlQ
     else:
-        # --single resolves staged/queue names too: isolated timing is
-        # the disposition instrument for not-yet-graduated work as well
-        q = {**load_all(), **load_staged(), **load_queue()}[name]
+        q = load_all()[name]
     samples = time_query(spark, q, sf_dir)
     print(json.dumps(
         {"query": name, "sec": min(samples), "samples": samples}
@@ -485,8 +472,7 @@ def main() -> None:
             loads[name] = best["load_after"]
     else:
         spark = get_spark(app_name="lakehouse-bench")
-        # staged bench=True entries are headline too (see headline_names)
-        registry = {**load_all(), **load_staged()}
+        registry = load_all()
         spark.range(1_000_000).selectExpr("sum(id)").collect()
         registry[names[0]].spark(spark, sf_dir).write.format("noop").mode(
             "overwrite"

@@ -1,11 +1,10 @@
 """Command-line front end: the engine as a standalone tool.
 
-Every registered query (and, with ``--staged``, the next round's
-queue) is runnable, explainable, and oracle-verifiable from the shell
-— the same three surfaces the grading driver exercises through
-``__spark_entry__``:
+Every registered query is runnable, explainable, and oracle-verifiable
+from the shell — the same three surfaces the grading driver exercises
+through ``__spark_entry__``:
 
-    python -m lambda_lakehouse_spark list [--tag dedup] [--staged] [--queue]
+    python -m lambda_lakehouse_spark list [--tag dedup]
     python -m lambda_lakehouse_spark run q1_pricing_summary [--limit 20]
     python -m lambda_lakehouse_spark explain dedup_minhash_lsh
     python -m lambda_lakehouse_spark oracle q1_pricing_summary
@@ -31,21 +30,6 @@ TABLES = (
     "region nation customer supplier part orders lineitem "
     "events documents embeddings"
 ).split()
-
-
-def _registry(include_staged: bool, include_queue: bool = False):
-    from lambda_lakehouse_spark.registry import (
-        load_all,
-        load_queue,
-        load_staged,
-    )
-
-    reg = dict(load_all())
-    if include_staged:
-        reg.update(load_staged())
-    if include_queue:
-        reg.update(load_queue())
-    return reg
 
 
 def _spark():
@@ -74,8 +58,9 @@ def _canon_rows(cols, rows):
 
 
 def cmd_list(args) -> int:
-    reg = _registry(args.staged, getattr(args, "queue", False))
-    for name, q in sorted(reg.items()):
+    from lambda_lakehouse_spark.registry import load_all
+
+    for name, q in sorted(load_all().items()):
         if args.tag and args.tag not in q.tags:
             continue
         mark = "*" if q.bench else " "
@@ -85,7 +70,9 @@ def cmd_list(args) -> int:
 
 
 def _get_query(args):
-    reg = _registry(True, True)
+    from lambda_lakehouse_spark.registry import load_all
+
+    reg = load_all()
     if args.query not in reg:
         near = [n for n in sorted(reg) if args.query in n]
         hint = f" (did you mean: {', '.join(near[:5])}?)" if near else ""
@@ -173,10 +160,6 @@ def main(argv: list[str] | None = None) -> int:
 
     sp = sub.add_parser("list", help="list queries (* = bench headline)")
     sp.add_argument("--tag", help="filter by tag")
-    sp.add_argument("--staged", action="store_true", help="include staged")
-    sp.add_argument(
-        "--queue", action="store_true", help="include the build-ahead queue"
-    )
     sp.set_defaults(fn=cmd_list)
 
     for name, fn, hlp in (

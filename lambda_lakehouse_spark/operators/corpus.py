@@ -620,7 +620,7 @@ def text_chunk_stride(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Collocation mining: lift-scored bigrams (round-6 staged)
+# Collocation mining: lift-scored bigrams
 # ---------------------------------------------------------------------------
 #
 # PMI collocation extraction with the log dropped: lift(x, y)
@@ -764,7 +764,7 @@ def corpus_collocations_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Priority sampling: weighted k-sample with unbiased subset-sum
-# estimator (round-6 staged)
+# estimator
 # ---------------------------------------------------------------------------
 #
 # Duffield, Lund & Thorup, "Priority sampling" (JACM 2007): draw
@@ -884,7 +884,7 @@ def sample_priority_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Paragraph-grain duplication audit (round-6 staged)
+# Paragraph-grain duplication audit
 # ---------------------------------------------------------------------------
 #
 # Dolma/RedPajama-style SUB-document dedup signal: fingerprint
@@ -995,7 +995,7 @@ def dedup_paragraph_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Rendezvous (highest-random-weight) shard routing (round-7 staged)
+# Rendezvous (highest-random-weight) shard routing
 # ---------------------------------------------------------------------------
 #
 # Thaler & Ravishankar, "Using name-based mappings to increase hit
@@ -1083,7 +1083,7 @@ def shard_rendezvous_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Temperature-scaled mixture sampling (round-7 staged)
+# Temperature-scaled mixture sampling
 # ---------------------------------------------------------------------------
 #
 # The alpha-smoothed source mixture used for multilingual/multi-source
@@ -1202,7 +1202,7 @@ def sample_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Cross-source n-gram overlap matrix (round-7 staged)
+# Cross-source n-gram overlap matrix
 # ---------------------------------------------------------------------------
 #
 # Leakage observability: how much 5-gram phrase vocabulary each pair
@@ -1310,7 +1310,7 @@ def corpus_cross_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Exact two-sample Kolmogorov–Smirnov drift (round-7 staged)
+# Exact two-sample Kolmogorov–Smirnov drift
 # ---------------------------------------------------------------------------
 #
 # Distribution drift between two sources as the exact two-sample KS
@@ -1436,7 +1436,6 @@ def stats_ks_drift_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Paragraph-dedup scrub: remove duplicated windows, reconstruct text
-# (round-7 staged)
 # ---------------------------------------------------------------------------
 #
 # The curation step the audit above only measures: every window keeps
@@ -1561,7 +1560,7 @@ def dedup_paragraph_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# End-to-end corpus curation pipeline (round-7 staged)
+# End-to-end corpus curation pipeline
 # ---------------------------------------------------------------------------
 #
 # The flagship composition: the four curation stages this module and
@@ -1765,7 +1764,7 @@ def corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Curriculum ordering: quality-bucket interleave (round-7 staged)
+# Curriculum ordering: quality-bucket interleave
 # ---------------------------------------------------------------------------
 #
 # Training-data pipelines rarely feed documents in storage order: a
@@ -1849,7 +1848,6 @@ def curriculum_length_interleave(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Bigram LM head: argmax next-word with conditional probability
-# (round-7 staged)
 # ---------------------------------------------------------------------------
 #
 # The count-based companion to corpus_collocations_lift: an exact
@@ -1944,7 +1942,7 @@ def text_bigram_next_word(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Leakage-safe train/val/test split (round-7 staged)
+# Leakage-safe train/val/test split
 # ---------------------------------------------------------------------------
 #
 # The split step every training-data pipeline runs LAST, and the one
@@ -2032,7 +2030,7 @@ def split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# TF-rarity top terms per document (round-7 staged)
+# TF-rarity top terms per document
 # ---------------------------------------------------------------------------
 #
 # Per-document salient terms — the relation behind corpus browsing,
@@ -2118,7 +2116,7 @@ def corpus_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Source diversity report (round-7 staged)
+# Source diversity report
 # ---------------------------------------------------------------------------
 #
 # The corpus-mix dashboard row: per source, its share of the corpus
@@ -2179,7 +2177,7 @@ def corpus_source_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Target-mix importance weights (round-7 staged)
+# Target-mix importance weights
 # ---------------------------------------------------------------------------
 #
 # Data-mixing planning: given a target source distribution (uniform
@@ -2264,7 +2262,7 @@ def sample_target_mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Token frequency spectrum (Good-Turing counts-of-counts) — round-7 staged
+# Token frequency spectrum (Good-Turing counts-of-counts)
 # ---------------------------------------------------------------------------
 #
 # The frequency-of-frequencies relation tokenizer and LM work starts
@@ -2340,7 +2338,7 @@ def corpus_token_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Heaps-law vocabulary growth curve — round-7 staged
+# Heaps-law vocabulary growth curve
 # ---------------------------------------------------------------------------
 #
 # Vocabulary size as a function of corpus size, evaluated at ten
@@ -2473,7 +2471,7 @@ def corpus_heaps_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Zipf rank-frequency curve — round-7 staged
+# Zipf rank-frequency curve
 # ---------------------------------------------------------------------------
 #
 # The rank x frequency relation over the head vocabulary: Zipf's law
@@ -2535,7 +2533,7 @@ def corpus_zipf_rank_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Per-source dedup survival + post-dedup mixture shift — round-7 staged
+# Per-source dedup survival + post-dedup mixture shift
 # ---------------------------------------------------------------------------
 #
 # The question a mixing plan must re-ask after dedup: which sources
@@ -2619,7 +2617,7 @@ def dedup_source_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# DSIR importance resampling — round-8 staged
+# DSIR importance resampling
 # ---------------------------------------------------------------------------
 #
 # Data Selection via Importance Resampling (Xie et al., NeurIPS 2023):
@@ -2801,7 +2799,7 @@ def sample_dsir_hashed_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# DSIR target-shift audit — round-8 staged
+# DSIR target-shift audit
 # ---------------------------------------------------------------------------
 #
 # Did the resampling work? Total-variation distance between hashed-
@@ -2970,7 +2968,7 @@ def eval_dsir_target_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# CCNet-style n-gram LM quality scoring — round-9 staged
+# CCNet-style n-gram LM quality scoring
 # ---------------------------------------------------------------------------
 #
 # CCNet (Wenzek et al., LREC 2020) scores every document by the
@@ -3115,8 +3113,7 @@ def lm_doc_scores(
     "-log10 p staircase), so the score is hash-certifiable across "
     "engines; n_oov counts tokens in buckets the target never emits",
     tags=("text", "quality", "corpus", "lm"),
-    # bench takes effect at graduation (headliners come from the
-    # registry): token-stream explode + broadcast count-model is a
+    # headline: token-stream explode + broadcast count-model is a
     # plan shape the headline set doesn't cover yet
     bench=True,
 )
@@ -3185,7 +3182,7 @@ def quality_ccnet_terciles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Bigram backoff surprisal (round-10 build-ahead QUEUE)
+# Bigram backoff surprisal
 # ---------------------------------------------------------------------------
 #
 # The second rung of the CCNet ladder: a hashed-BIGRAM count model
@@ -3400,7 +3397,7 @@ def quality_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Per-source perplexity drift audit (round-10 build-ahead QUEUE)
+# Per-source perplexity drift audit
 # ---------------------------------------------------------------------------
 #
 # The roll-up that closes the CCNet loop: once every document carries
@@ -3517,7 +3514,7 @@ def quality_perplexity_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Source-pair unigram cosine similarity (round-9 build-ahead QUEUE)
+# Source-pair unigram cosine similarity
 # ---------------------------------------------------------------------------
 #
 # The stylometric companion to the n-gram containment contamination
@@ -3626,7 +3623,7 @@ def source_unigram_cosine(docs: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Chi-square distinctive keywords per source (round-9 build-ahead QUEUE)
+# Chi-square distinctive keywords per source
 # ---------------------------------------------------------------------------
 #
 # The classic corpus-comparison tool (Kilgarriff 2001, "Comparing

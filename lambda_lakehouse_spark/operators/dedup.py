@@ -1244,7 +1244,7 @@ def dedup_minhash_lsh_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Containment near-dup pairs (round-6 staged)
+# Containment near-dup pairs
 # ---------------------------------------------------------------------------
 
 _CONTAINMENT_THRESHOLD = 0.5
@@ -1356,7 +1356,7 @@ def dedup_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# SimHash banded pairing (round-6 staged)
+# SimHash banded pairing
 # ---------------------------------------------------------------------------
 
 _SIMHASH_MAX_HAMMING = 3  # SIMHASH_BANDS bands: pigeonhole-complete for <= 3
@@ -1507,7 +1507,7 @@ def dedup_simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# 64-bit SimHash banded pairing (round-11 build-ahead queue)
+# 64-bit SimHash banded pairing
 # ---------------------------------------------------------------------------
 #
 # The diversity upgrade path named in the round-10 verdict: on this
@@ -1678,8 +1678,7 @@ def dedup_simhash64_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 # ---------------------------------------------------------------------------
-# Prefix-filtered exact Jaccard self-join (AllPairs / PPJoin family;
-# round-7 staged)
+# Prefix-filtered exact Jaccard self-join (AllPairs / PPJoin family)
 # ---------------------------------------------------------------------------
 #
 # The third, strongest answer to the quadratic-self-join problem
@@ -1854,26 +1853,14 @@ def jaccard_prefix_filter_pairs(
     )
 
 
-# RETIRED REGISTRATION (round 12, per the round-11 verdict, demand 3):
-# ``dedup_jaccard_prefix_filter`` registered the byte-identical plan
-# (jaccard_prefix_filter_pairs over documents) under a second name —
-# one name claimed the LLM-pipeline n-gram-Jaccard operator, the other
-# the AllPairs/PPJoin algorithm. Two registrations of one plan cost a
-# bench-headline slot and a rotation slot every staleness cycle while
-# certifying nothing extra, so round 12 keeps ONE registry entry for
-# the plan (dedup_ngram_jaccard, whose doc names the AllPairs
-# algorithm and the Bayardo WWW'07 citation) and retires this alias.
-# Green history for the retired name lives in CORRECTNESS_r10/r11
-# (hash_match true both rounds, same plan bytes as the survivor); the
-# brute-force-vs-prefix-filter equivalence stays pinned in pytest
+# jaccard_prefix_filter_pairs is registered once, as dedup_ngram_jaccard
+# (whose doc names the AllPairs algorithm); the brute-force-vs-prefix-
+# filter equivalence is pinned in pytest
 # (tests/test_staged.py::test_prefix_filter_equals_bruteforce_and_prunes).
-# The bench=True flag moved to dedup_ngram_jaccard so the headline set
-# still tracks the plan's cost round-over-round under the surviving
-# name (floor single ~6.2 s at sf0.1, r11 verdict measurement).
 
 
 # ---------------------------------------------------------------------------
-# Winnowing substring-duplicate pairs (round-7 staged)
+# Winnowing substring-duplicate pairs
 # ---------------------------------------------------------------------------
 #
 # The substring-grain dedup modality the set-based paths cannot see:
@@ -2060,8 +2047,7 @@ def dedup_winnowing_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Incremental dedup replay: K arrival batches == the full self-join —
-# round-8 staged
+# Incremental dedup replay: K arrival batches == the full self-join
 # ---------------------------------------------------------------------------
 #
 # The exactness guarantee the daily-batch (and streaming) architecture
@@ -2127,7 +2113,7 @@ def dedup_incremental_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Exact substring duplicate runs (round-9 build-ahead QUEUE)
+# Exact substring duplicate runs
 # ---------------------------------------------------------------------------
 #
 # The EXACT counterpart to winnowing: Lee et al., "Deduplicating
@@ -2470,7 +2456,7 @@ def dedup_substring_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# MinHash estimator calibration (round-12 build-ahead queue)
+# MinHash estimator calibration
 # ---------------------------------------------------------------------------
 #
 # The audit family so far certifies CANDIDATE quality (dedup_lsh_eval:
@@ -2623,7 +2609,6 @@ FROM agg
     f"sums for order-independent means, <= {MINHASH_K + 1} output "
     "rows at any corpus size",
     tags=("dedup", "lsh", "eval", "stats"),
-    staged=True,
 )
 def dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -2631,7 +2616,7 @@ def dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# IDF-weighted Jaccard rescoring (round-12 build-ahead queue)
+# IDF-weighted Jaccard rescoring
 # ---------------------------------------------------------------------------
 #
 # Unweighted Jaccard treats a boilerplate shingle ("the quick") and a
@@ -2762,7 +2747,6 @@ WHERE CAST(w_inter AS DOUBLE) / w_union >= {threshold}
     "heuristic). Candidate-bounded postings join, exact BIGINT "
     "weight sums, one double division per pair",
     tags=("dedup", "lsh", "join", "scale"),
-    staged=True,
 )
 def dedup_idf_weighted_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")

@@ -160,7 +160,7 @@ def dq_expectation_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Freshness-lag monitoring (round-6 staged)
+# Freshness-lag monitoring
 # ---------------------------------------------------------------------------
 
 _FRESH_SLA_US = 24 * 3600 * 1_000_000  # 24h
@@ -220,7 +220,7 @@ def dq_freshness_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Referential-integrity audit across the foreign-key graph (round-7 staged)
+# Referential-integrity audit across the foreign-key graph
 # ---------------------------------------------------------------------------
 #
 # The cross-TABLE complement of with_expectations (which checks rows
@@ -356,7 +356,7 @@ def dq_referential_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Column profiling (round-7 staged)
+# Column profiling
 # ---------------------------------------------------------------------------
 #
 # The dataset-card relation: per configured column, row/null/distinct

@@ -197,7 +197,7 @@ def eval_decile_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Sample autocorrelation of the daily revenue series (round-7 staged)
+# Sample autocorrelation of the daily revenue series
 # ---------------------------------------------------------------------------
 #
 # Lag-k autocorrelation (k = 1..7) of daily order revenue, as the
@@ -322,7 +322,7 @@ def stats_autocorr_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Benford first-digit audit (round-7 staged)
+# Benford first-digit audit
 # ---------------------------------------------------------------------------
 #
 # The classic forensic data-quality screen: the leading-digit
@@ -411,7 +411,7 @@ def stats_benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Chi-square test of independence: lang x source (round-7 staged)
+# Chi-square test of independence: lang x source
 # ---------------------------------------------------------------------------
 #
 # Is document language independent of ingestion source? The
@@ -484,7 +484,7 @@ def stats_chi2_lang_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Mann–Whitney U two-sample test (round-7 staged)
+# Mann–Whitney U two-sample test
 # ---------------------------------------------------------------------------
 #
 # The distribution-drift question KS answers ("are these two sources'
@@ -616,7 +616,7 @@ def stats_mannwhitney_doclen(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Exact NDCG@10 per source (round-7 staged)
+# Exact NDCG@10 per source
 # ---------------------------------------------------------------------------
 #
 # The ranking-quality metric: per source, rank documents by the demo
@@ -740,7 +740,7 @@ def eval_ndcg_at10(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Half-sample confidence interval, RNG-free (round-7 staged)
+# Half-sample confidence interval, RNG-free
 # ---------------------------------------------------------------------------
 #
 # Error bars for a corpus statistic WITHOUT random number generation:
@@ -879,7 +879,7 @@ def stats_halfsample_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Embedding isotropy / anisotropy audit (round-9 build-ahead QUEUE)
+# Embedding isotropy / anisotropy audit
 # ---------------------------------------------------------------------------
 #
 # Contextual-embedding spaces are notoriously ANISOTROPIC — vectors

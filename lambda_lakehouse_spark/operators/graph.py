@@ -233,7 +233,7 @@ def graph_pagerank_supply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Exact triangle counting: degree-oriented enumeration (round-7 staged)
+# Exact triangle counting: degree-oriented enumeration
 # ---------------------------------------------------------------------------
 #
 # The second classic graph primitive after link analysis: exact
@@ -412,7 +412,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Supplier-overlap link prediction (round-7 staged)
+# Supplier-overlap link prediction
 # ---------------------------------------------------------------------------
 #
 # Common-neighbors / Jaccard link prediction on the bipartite

@@ -333,7 +333,7 @@ def multimodal_patch_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Audio-envelope extraction (round-6 staged)
+# Audio-envelope extraction
 # ---------------------------------------------------------------------------
 
 ENVELOPE_SCHEMA = (
@@ -431,7 +431,7 @@ def multimodal_audio_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Cross-video frame overlap (round-7 staged)
+# Cross-video frame overlap
 # ---------------------------------------------------------------------------
 #
 # Near-dup detection for VIDEO: two payloads sharing sampled-frame

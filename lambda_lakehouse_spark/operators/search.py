@@ -251,7 +251,7 @@ def search_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Positional phrase search (round-7 staged)
+# Positional phrase search
 # ---------------------------------------------------------------------------
 #
 # Exact phrase matching over a positional inverted index — the IR
@@ -360,7 +360,7 @@ def search_phrase_positional(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Hybrid retrieval: BM25 + dense cosine, reciprocal-rank fusion (r7 staged)
+# Hybrid retrieval: BM25 + dense cosine, reciprocal-rank fusion
 # ---------------------------------------------------------------------------
 #
 # The RAG-serving primitive: fuse a sparse keyword ranking and a dense

@@ -768,7 +768,7 @@ def eval_matryoshka_prefix_recall(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 # ---------------------------------------------------------------------------
-# Cluster-balanced sampling + audit — round-9 staged
+# Cluster-balanced sampling + audit
 # ---------------------------------------------------------------------------
 #
 # Training-data curation oversamples rare semantic regions: instead of
@@ -975,7 +975,7 @@ def eval_cluster_balance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Greedy k-center coreset selection (round-9 build-ahead QUEUE)
+# Greedy k-center coreset selection
 # ---------------------------------------------------------------------------
 #
 # The diversity-first data-selection primitive: Gonzalez's greedy
@@ -1278,7 +1278,7 @@ def eval_cluster_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# PQ reconstruction-distortion audit (round-12 build-ahead queue)
+# PQ reconstruction-distortion audit
 # ---------------------------------------------------------------------------
 #
 # The acceptance number behind the 32x PQ memory budget: per subspace,
@@ -1376,7 +1376,6 @@ GROUP BY m
     "the audit cannot drift from the codebook it audits; floor-scaled "
     f"BIGINT error sums, {PQ_M} output rows at any corpus size",
     tags=("eval", "vector", "quantization", "pq"),
-    staged=True,
 )
 def eval_pq_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = read_table(spark, sf_dir, "embeddings")

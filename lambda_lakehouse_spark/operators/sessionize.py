@@ -491,7 +491,7 @@ def sessionize_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Robust anomaly detection: median/MAD outlier flags (round-6 staged)
+# Robust anomaly detection: median/MAD outlier flags
 # ---------------------------------------------------------------------------
 #
 # The classic robust outlier rule — |x - median| > 3 * MAD — with BOTH
@@ -632,7 +632,7 @@ def events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Funnel time-to-convert percentiles (round-6 staged)
+# Funnel time-to-convert percentiles
 # ---------------------------------------------------------------------------
 
 _TTC_STEP_A = "signup"
@@ -739,7 +739,7 @@ def funnel_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Bounce rate per day (round-6 staged)
+# Bounce rate per day
 # ---------------------------------------------------------------------------
 
 _BOUNCE_ORACLE = f"""
@@ -803,7 +803,7 @@ def sessionize_bounce_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# CUSUM changepoint detection (round-6 staged)
+# CUSUM changepoint detection
 # ---------------------------------------------------------------------------
 
 def cusum_changepoints(events: DataFrame) -> DataFrame:
@@ -914,7 +914,7 @@ def events_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Marketing-style conversion attribution (round-7 staged)
+# Marketing-style conversion attribution
 # ---------------------------------------------------------------------------
 #
 # First-touch / last-touch attribution: for every purchase, the

@@ -36,6 +36,8 @@ worth re-measuring.
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -69,11 +71,12 @@ def _ssum_sql(e: str) -> str:
     i.e. |Σ terms| < ~9.2e3 at 1e15 scaling. Unit-norm cosine terms
     are ≤ 1 per member pair, so the bound allows ~9e3 accumulated
     units — orders of magnitude above any per-group sum here (dims
-    ≤ 64, similarities ≤ 1). Past it the two engines FAIL DIFFERENTLY:
-    DuckDB raises on the HUGEINT->BIGINT overflow (the gate turns red
-    loudly) while Spark's non-ANSI SUM(BIGINT) wraps silently — so an
-    oracle-side error, not a silent mismatch, is the observable
-    symptom. Any new caller summing unbounded magnitudes must pre-scale
+    ≤ 64, similarities ≤ 1). Past it both engines raise: DuckDB on the
+    HUGEINT->BIGINT cast, Spark on the SUM(BIGINT) itself, because
+    ANSI mode is on by default in Spark 4 (pinned by
+    tests/test_session.py). With ANSI off, Spark's SUM(BIGINT) would
+    wrap silently and the symptom would be an oracle-side error
+    instead. Any new caller summing unbounded magnitudes must pre-scale
     (as eval_dsir_target_shift's integer cross-products do) or assert
     the bound on both engines.
     """
@@ -619,8 +622,12 @@ def ann_cosine_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # (applicationId, sf_dir) → materialized centroid table. Keyed by app id
-# so a cached DataFrame can never outlive its SparkSession.
+# so a cached DataFrame can never outlive its SparkSession. The lock
+# covers lookup, eviction, training and insert: concurrent callers
+# (the threaded oracle pool) train once and never see a half-evicted
+# cache.
 _CENTROID_CACHE: dict[tuple[str, str], DataFrame] = {}
+_CENTROID_LOCK = threading.Lock()
 
 
 def pretrained_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -631,15 +638,16 @@ def pretrained_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     is an offline job whose output the serving query reads."""
     app_id = spark.sparkContext.applicationId
     key = (app_id, sf_dir)
-    if key not in _CENTROID_CACHE:
-        # evict entries from other (stopped) sessions: keying prevents
-        # cross-session reuse, eviction stops dead sessions' DataFrames
-        # from being pinned for the life of the process
-        for stale in [k for k in _CENTROID_CACHE if k[0] != app_id]:
-            del _CENTROID_CACHE[stale]
-        emb = read_table(spark, sf_dir, "embeddings")
-        _CENTROID_CACHE[key] = train_ivf_cells(emb)
-    return _CENTROID_CACHE[key]
+    with _CENTROID_LOCK:
+        if key not in _CENTROID_CACHE:
+            # evict entries from other (stopped) sessions: keying prevents
+            # cross-session reuse, eviction stops dead sessions' DataFrames
+            # from being pinned for the life of the process
+            for stale in [k for k in _CENTROID_CACHE if k[0] != app_id]:
+                del _CENTROID_CACHE[stale]
+            emb = read_table(spark, sf_dir, "embeddings")
+            _CENTROID_CACHE[key] = train_ivf_cells(emb)
+        return _CENTROID_CACHE[key]
 
 
 @register(
@@ -1043,7 +1051,7 @@ def ts_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Embedding drift detection (round-6 staged)
+# Embedding drift detection
 # ---------------------------------------------------------------------------
 #
 # The training-data ops question "did the embedding distribution move
@@ -1129,7 +1137,7 @@ def embed_drift_by_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Principal component by power iteration (round-6 staged)
+# Principal component by power iteration
 # ---------------------------------------------------------------------------
 #
 # Distributed linear algebra as pure relational ops: the top
@@ -1279,7 +1287,7 @@ def embed_pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# kNN label-consistency evaluation (round-7 staged)
+# kNN label-consistency evaluation
 # ---------------------------------------------------------------------------
 #
 # The standard intrinsic embedding-quality probe for a training-data
@@ -1412,7 +1420,7 @@ def eval_knn_label_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Embedding-space label separation (centroid margin) — round-7 staged
+# Embedding-space label separation (centroid margin)
 # ---------------------------------------------------------------------------
 #
 # The geometry companion to eval_knn_label_accuracy: instead of
@@ -1550,7 +1558,7 @@ def embed_label_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# kNN cosine calibration bins — round-7 staged
+# kNN cosine calibration bins
 # ---------------------------------------------------------------------------
 #
 # Is cosine similarity a calibrated signal for label agreement? Bin
@@ -1654,7 +1662,7 @@ def eval_cosine_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# IVF recall@k vs exact brute force (round-7 staged)
+# IVF recall@k vs exact brute force
 # ---------------------------------------------------------------------------
 #
 # The accuracy side of the IVF speed/recall trade: for each query, how
@@ -1769,7 +1777,7 @@ def eval_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Row-local exact cosine top-k via higher-order functions (r7 staged)
+# Row-local exact cosine top-k via higher-order functions
 # ---------------------------------------------------------------------------
 #
 # The alternative front end to the position-exploded brute plan: keep
@@ -1853,7 +1861,7 @@ def ann_cosine_topk_rowlocal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Contrastive hard-negative mining — round-8 staged
+# Contrastive hard-negative mining
 # ---------------------------------------------------------------------------
 #
 # Triplet/contrastive training-data prep over the embedding corpus:
@@ -2319,7 +2327,7 @@ def eval_ann_recall_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Embedding hubness audit (round-12 build-ahead queue)
+# Embedding hubness audit
 # ---------------------------------------------------------------------------
 #
 # Hubness (Radovanovic et al., JMLR'10) is the high-dimensional
@@ -2429,7 +2437,6 @@ FROM occ GROUP BY k_occ
     "and search serving; every cell an exact BIGINT, one corpus scan "
     "against a broadcast panel at any scale",
     tags=("similarity", "vector", "eval", "stats"),
-    staged=True,
 )
 def eval_embedding_hubness(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = read_table(spark, sf_dir, "embeddings")
@@ -2437,7 +2444,7 @@ def eval_embedding_hubness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# IVF cell-occupancy balance audit (round-12 build-ahead queue)
+# IVF cell-occupancy balance audit
 # ---------------------------------------------------------------------------
 #
 # The partition-skew audit for the trained coarse quantizer: IVF
@@ -2515,7 +2522,6 @@ FROM occ, tot
     "rows and one aggregate-bounded 1-row total broadcast at any "
     "corpus size",
     tags=("eval", "vector", "ivf", "stats"),
-    staged=True,
 )
 def eval_ivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = read_table(spark, sf_dir, "embeddings")

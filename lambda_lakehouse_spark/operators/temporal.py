@@ -270,7 +270,7 @@ def as_of_join_nearest(
 
 
 # ---------------------------------------------------------------------------
-# Certified query (round-6 staged): nearest purchase within 6h of a click
+# Certified query: nearest purchase within 6h of a click
 # ---------------------------------------------------------------------------
 
 _NEAREST_TOL_US = 6 * 3600 * 1_000_000

@@ -585,7 +585,7 @@ def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# First-occurrence novelty scoring (round-6 staged)
+# First-occurrence novelty scoring
 # ---------------------------------------------------------------------------
 
 _NOVELTY_NGRAM = 3
@@ -671,7 +671,7 @@ def text_novelty_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# BPE-style pair statistics (round-7 staged)
+# BPE-style pair statistics
 # ---------------------------------------------------------------------------
 #
 # The first step of byte-pair-encoding tokenizer training: frequency of
@@ -736,7 +736,7 @@ def text_bpe_pair_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Code-vs-prose signals (round-7 staged)
+# Code-vs-prose signals
 # ---------------------------------------------------------------------------
 #
 # Corpus-curation triage: per-document structural signals that separate
@@ -801,7 +801,7 @@ def text_code_prose_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Lang-ID confusion matrix + per-class metrics (round-7 staged)
+# Lang-ID confusion matrix + per-class metrics
 # ---------------------------------------------------------------------------
 #
 # The evaluation relation for the lang-id heuristic (and the template
@@ -894,7 +894,7 @@ def eval_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Cohen's kappa for the lang-id audit (round-7 staged)
+# Cohen's kappa for the lang-id audit
 # ---------------------------------------------------------------------------
 #
 # The chance-corrected agreement score that belongs next to the
@@ -984,7 +984,7 @@ def eval_langid_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Token rarity / novelty-mass quality score (round-7 staged)
+# Token rarity / novelty-mass quality score
 # ---------------------------------------------------------------------------
 #
 # The corpus-frequency profile of each document's tokens — the
@@ -1049,7 +1049,7 @@ def text_rarity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Iterative BPE merge training (round-7 staged)
+# Iterative BPE merge training
 # ---------------------------------------------------------------------------
 #
 # Tokenizer training as a distributed loop: BPE_STEPS rounds of
@@ -1205,7 +1205,7 @@ def bpe_train(docs: DataFrame, steps: int = BPE_STEPS):
 
 
 # ---------------------------------------------------------------------------
-# BPE compression audit — round-8 staged
+# BPE compression audit
 # ---------------------------------------------------------------------------
 #
 # The number a tokenizer-training run is judged by: after applying the
@@ -1285,7 +1285,7 @@ def text_bpe_compression(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Cross-source contamination matrix — round-9 staged
+# Cross-source contamination matrix
 # ---------------------------------------------------------------------------
 #
 # Pairwise n-gram containment between SOURCES: for every source pair,
@@ -1348,7 +1348,7 @@ JOIN sizes nb ON nb.source = s.src_b
     "16-byte gram hashes, <=|sources|^2 pairs per posting, output "
     "bounded by the source-pair matrix",
     tags=("text", "dedup", "eval", "decontamination", "corpus"),
-    # bench takes effect at graduation: the collect_set posting build +
+    # headline: the collect_set posting build +
     # row-local pair expansion + lazy checkpoint is a new plan shape
     # (measured 6.0 s at sf0.1 — second-heaviest after winnowing, so it
     # must regress loudly)
@@ -1457,7 +1457,7 @@ def source_contamination(docs: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Tokenizer fertility by language x source (round-9 build-ahead QUEUE)
+# Tokenizer fertility by language x source
 # ---------------------------------------------------------------------------
 #
 # The multilingual-corpus budgeting signal: fertility = subword tokens

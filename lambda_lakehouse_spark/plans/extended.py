@@ -1694,7 +1694,7 @@ def stats_group_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Equi-width histogram profiling (round-6 staged)
+# Equi-width histogram profiling
 # ---------------------------------------------------------------------------
 
 _HIST_N_BUCKETS = 20
@@ -1756,7 +1756,7 @@ def profile_histogram_equiwidth(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Equi-DEPTH histogram profiling (round-7 staged)
+# Equi-DEPTH histogram profiling
 # ---------------------------------------------------------------------------
 #
 # The quantile companion to the equi-width profile above: buckets hold
@@ -1815,7 +1815,7 @@ def profile_histogram_equidepth(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Two-sample experiment comparison (round-6 staged)
+# Two-sample experiment comparison
 # ---------------------------------------------------------------------------
 #
 # The experimentation primitive: compare a metric between two cohorts
@@ -1880,7 +1880,7 @@ def ab_arm_statistics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# EWMA smoothing (round-7 staged)
+# EWMA smoothing
 # ---------------------------------------------------------------------------
 #
 # Exponentially-weighted moving average of daily revenue per event

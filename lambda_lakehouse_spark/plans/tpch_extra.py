@@ -900,7 +900,7 @@ def skyline_pareto_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Market-basket association rules (round-6 staged)
+# Market-basket association rules
 # ---------------------------------------------------------------------------
 
 _BASKET_MIN_SUPPORT = 2
@@ -1016,7 +1016,7 @@ def basket_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# 2-D grid-bucketed proximity self-join (round-6 staged)
+# 2-D grid-bucketed proximity self-join
 # ---------------------------------------------------------------------------
 #
 # The spatial-join pattern generalized from operators/temporal.py's
@@ -1099,7 +1099,7 @@ def grid_join_similar_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# RFM customer segmentation (round-6 staged)
+# RFM customer segmentation
 # ---------------------------------------------------------------------------
 
 _RFM_ORACLE = """
@@ -1192,7 +1192,7 @@ def rfm_customer_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Sweep-line interval counting (round-6 staged)
+# Sweep-line interval counting
 # ---------------------------------------------------------------------------
 #
 # "How many orders were open on each day?" — the interval-stabbing
@@ -1276,7 +1276,7 @@ def interval_open_orders_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Seasonal index decomposition (round-6 staged)
+# Seasonal index decomposition
 # ---------------------------------------------------------------------------
 
 _SEASONAL_ORACLE = """
@@ -1334,7 +1334,7 @@ def seasonal_index_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Market-concentration index (round-6 staged)
+# Market-concentration index
 # ---------------------------------------------------------------------------
 
 _HHI_ORACLE = """
@@ -1401,7 +1401,7 @@ def market_concentration_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Gini coefficient (round-6 staged)
+# Gini coefficient
 # ---------------------------------------------------------------------------
 #
 # Inequality of customer spend via the rank formula
@@ -1497,7 +1497,7 @@ def customer_spend_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Global percent_rank / cume_dist without a global sort (round-7 staged)
+# Global percent_rank / cume_dist without a global sort
 # ---------------------------------------------------------------------------
 #
 # The remaining ANSI ranking functions at GLOBAL scope: percent_rank =
@@ -1569,7 +1569,7 @@ def window_global_pctrank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Exact interpolated global percentiles without a global sort (round-7 staged)
+# Exact interpolated global percentiles without a global sort
 # ---------------------------------------------------------------------------
 #
 # PERCENTILE_CONT(p) WITHIN GROUP (ORDER BY ...) at GLOBAL scope is the

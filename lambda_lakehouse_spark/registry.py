@@ -20,6 +20,10 @@ Cross-engine exactness rules (applied throughout):
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+import re
 from dataclasses import dataclass, field
 from typing import Callable
 
@@ -40,159 +44,9 @@ class Query:
 
 REGISTRY: dict[str, Query] = {}
 
-# Queries fully implemented and oracle-tested (tests/test_oracle_queries.py
-# runs them against DuckDB like everything else) but NOT yet exposed to the
-# grading driver: the driver grades a 50-query window per round, and when a
-# round's window is already committed to the existing uncertified backlog,
-# new work stages here and graduates into REGISTRY (+ DRIVER_PRIORITY) at
-# the next round boundary. Staging is a scheduling state, not a quality
-# tier — the pytest gate is identical.
-#
-# GRADUATION PROCEDURE (first session of the following round):
-#   1. flip each query's ``staged=True`` to default (remove the kwarg);
-#   2. rebuild DRIVER_PRIORITY with tools/gen_driver_window.py (orders
-#      never-green first — staged graduates have no green driver row —
-#      then --must re-certs, then the stalest greens);
-#   3. re-run: python tools/gen_coverage_appendix.py && pytest
-#      tests/test_registry_contract.py — the window-fit invariant will
-#      fail loudly if too many uncertified queries would queue at once.
-# The round-5 cohort (33 queries) graduated at the round-6 boundary,
-# the round-6 cohort (24) at the round-7 boundary, the round-7 cohort
-# (29) at the round-8 boundary, the round-8 cohort (5) at the round-9
-# boundary, the round-9 cohort (5) at the round-10 boundary, and the
-# round-10 cohort (5: substring runs/coverage, fertility, isotropy,
-# unigram-cosine) at the round-11 boundary, each following exactly
-# this procedure. STAGED holds the 5 queue entries promoted
-# oldest-first at the round-11 boundary (bitext margin, chi2
-# keywords, k-core coreness, signal spearman, k-center coreset),
-# queued for round 12. The round-11 cohort (5: bitext margin, chi2
-# keywords, k-core coreness, signal spearman, k-center coreset)
-# graduated at the round-12 boundary, same procedure. STAGED now
-# holds the 5 queue entries promoted at the round-12 boundary
-# (silhouette, bigram surprisal, perplexity drift, ANN recall audit,
-# 64-bit SimHash pairs), queued for round 13.
-#
-# STALENESS / ROTATION POLICY (adopted round 8, per the round-7
-# verdict): at 219 registered queries and a 50-slot driver window, a
-# full re-certification cycle takes ~4.5 rounds, so driver-green
-# staleness is bounded by scheduling, not by code health (pytest
-# re-proves every oracle each run regardless). To keep the bound from
-# growing:
-#   - new STAGED work is capped at 5 queries per round, so graduations
-#     consume at most ~5 window slots the following round;
-#   - every remaining slot goes to the stalest greens, oldest round
-#     first (gen_driver_window.py orders this mechanically);
-#   - changed-plan queries are forced in via --must even if their last
-#     green is recent — a green row must certify the CURRENT plan.
-# With ≤5 graduates + ~45 rotation slots per round the steady-state
-# re-cert cycle is ~224/45 ≈ 5.0 rounds; the r8 window front-loads the
-# final oversized graduation (29) and clears 15 of the 49-query
-# r4-stale cohort; the r9 window takes the 5 r8 graduates + the
-# remaining 34 r4-greens (clearing r4 entirely) + the 11
-# alphabetically-first r5 greens.
-#
-# ROUND-10 ROTATION — EXECUTED (round-9 verdict, demand 2): the 5 r9
-# graduates took slots 1-5, three --must re-certs (dedup_ngram_jaccard
-# rebased onto the prefix-filter plan; dedup_lsh_eval bounded to the
-# md5-selected 18.75% doc slice, measured ~63 s -> ~11 s isolated at
-# sf0.1 — both round-9-verdict plan changes — plus the round-10
-# simhash bit_count verify rewrite, 14.1 -> ~6.3 s) took slots 6-8,
-# all 34 remaining r5 greens cleared the r5 tier (slots 9-42), and
-# the 8 alphabetically-first r6 greens filled slots 43-50 (the musts
-# consumed the other pre-planned r6 slots). Registry 229; all 50 rows
-# green in CORRECTNESS_r10.
-#
-# ROUND-11 ROTATION — EXECUTED (round-10 verdict, demands 1+4): the 5
-# r10 graduates took slots 1-5; five --must re-certs took slots 6-10,
-# all round-11 plan changes:
-#   agg_approx_sketches split per demand 3 — the registered plan now
-#     carries sketch-only contract booleans (cross-estimator
-#     agreement, quantile bounds, HLL merge identity); the exact
-#     countDistinct / exact-percentile audits moved to a pytest
-#     property at small SF (16.5 -> 1.1 s at sf0.1);
-#   dedup_lsh_eval slice trimmed 18.75% -> 12.5% (demand 7) AND the
-#     shared _doc_grain_jaccard verify given an explicit-count
-#     repartition (AQE coalesces the byte-tiny candidate exchange to
-#     ONE task and serializes the CPU-dense array_intersect verify —
-#     measured 8 s of a 10.9 s run on one core; 10.99 -> 3.8-4.8 s);
-#   dedup_minhash_lsh_verified inherits the same verify repartition
-#     (~3.7-4.6 s in-session, no regression);
-#   dedup_ngram_jaccard / dedup_jaccard_prefix_filter got the same
-#     explicit repartition in jaccard_prefix_filter_pairs' inline
-#     verify (8.07 -> 6.11 s / 9.10 -> 7.30 s); per the round-10
-#     advice the byte-identical twins are ONE certification unit —
-#     the must names dedup_ngram_jaccard, prefix_filter inherits;
-#   dedup_simhash_hamming_pairs (fifth must, found while building the
-#     64-bit queue variant): the one-file-split documents scan
-#     serialized the CPU-dense vote loop on one core and
-#     CollapseProject inlined the signature expression into sig_int
-#     (twice-per-row evaluation) — _spread_if_narrow before the
-#     signature projection + checkpoint moved before the conv;
-#     6.3 -> ~2.1-3.0 s at sf0.1, output identical.
-# The ENTIRE 33-query r6 tier cleared (slots 11-43) and the 7
-# alphabetically-first r7 greens filled slots 44-50. Registry 234.
-#
-# ROUND-12 ROTATION — EXECUTED (round-11 verdict, demands 1+3): the 5
-# r11 graduates (mine_bitext_margin, corpus_chi2_keywords,
-# graph_kcore_coreness, eval_signal_spearman, sample_kcenter_coreset)
-# took slots 1-5; no plan changed since its r11 green, so there are
-# no --must re-certs this round; the ENTIRE remaining 42-query
-# r7-stale tier cleared (slots 6-47, including the r11-displaced
-# dedup_paragraph_scrub) and the 3 alphabetically-first r8 greens
-# filled slots 48-50. The boundary also promoted all 5 queue entries
-# to STAGED (silhouette, bigram surprisal, perplexity drift, ANN
-# recall audit, simhash64), emptying the queue, and RETIRED the
-# dedup_jaccard_prefix_filter alias registration (demand 3): it was
-# a second name over the byte-identical dedup_ngram_jaccard plan
-# (both green r10+r11 on the same bytes); one registry entry per
-# distinct plan, the brute-vs-prefix equivalence stays pinned in
-# pytest, and the bench flag moved to the surviving name. Registry
-# 238 (234 + 5 graduates - 1 retirement).
-#
-# ROUND-13 ROTATION — EXECUTED (per the round-11 demand-6 pre-plan):
-# the 5 r12 graduates (silhouette, bigram surprisal, perplexity
-# drift, ANN recall audit, simhash64 — simhash64 keeping its
-# bench=True flag) graduated to REGISTRY; the 5 queue entries
-# (hubness, minhash calibration, PQ distortion, IDF-weighted jaccard,
-# IVF cell balance) promoted to STAGED, emptying the queue. The r13
-# optimization round also registered ONE new serve-twin query,
-# dedup_semdedup_cells_pretrained (the ann_cosine_topk_ivf →
-# _pretrained semantics-preserving split applied to SemDeDup, r12
-# verdict demand 4) — never-green, so it takes a window slot. Window:
-# 6 never-green (slots 1-6) + 8 changed-plan --musts (slots 7-14, the
-# round's k-means-assignment/pagerank/semdedup plan changes — a green
-# row must certify the CURRENT plan) + the 36 stalest r8 greens
-# (slots 15-50). Registry 244 (238 + 5 graduates + 1 serve twin).
-STAGED: dict[str, Query] = {}
-
-# Build-ahead queue: fully implemented and oracle-tested (the pytest
-# gate runs them exactly like registered/staged queries) but not yet
-# STAGED, because the ≤5-new-staged-per-round cap for this round is
-# already spent. At the next round boundary, up to 5 queue entries are
-# PROMOTED to staged (flip ``queue=True`` to ``staged=True``) alongside
-# the usual graduation; anything beyond 5 waits another round. This
-# keeps the staleness-bounding cap honest while letting a build session
-# run ahead of the rotation schedule.
-#
-# Round-12 boundary promoted ALL 5 remaining entries (silhouette,
-# bigram surprisal, perplexity drift, ANN recall audit, 64-bit
-# SimHash pairs) to STAGED, emptying the queue. The round-12
-# build-ahead cohort then registered here — 5 entries closing the
-# estimator-audit loop the verdicts have graded well (every
-# estimator/structure audited against exact ground truth):
-#   eval_embedding_hubness      k-occurrence histogram of the exact
-#                               top-k graph (retrieval-geometry audit)
-#   dedup_minhash_calibration   MinHash estimated-vs-exact Jaccard
-#                               calibration curve per match count
-#   eval_pq_distortion          PQ reconstruction MSE + codebook
-#                               utilization per subspace
-#   dedup_idf_weighted_jaccard  reciprocal-DF weighted Jaccard verify
-#                               over LSH candidates (boilerplate-robust)
-#   eval_ivf_cell_balance       IVF cell-occupancy balance / dead-cell
-#                               audit (the partition-skew capacity plan)
-# — ALL 5 promoted to STAGED at the r13 boundary (executed; queue now
-# empty), under the same ≤5-new-staged-per-round cap.
-QUEUE: dict[str, Query] = {}
+# The committed CORRECTNESS_r<N>.json driver artifacts sit in the
+# directory that contains the package (an installed copy has none).
+_REPO_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def register(
@@ -201,100 +55,53 @@ def register(
     doc: str = "",
     tags: tuple[str, ...] = (),
     bench: bool = False,
-    staged: bool = False,
-    queue: bool = False,
 ) -> Callable[[SparkQuery], SparkQuery]:
     def deco(fn: SparkQuery) -> SparkQuery:
-        if name in REGISTRY or name in STAGED or name in QUEUE:
+        if name in REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
-        target = QUEUE if queue else (STAGED if staged else REGISTRY)
-        target[name] = Query(name, fn, oracle, doc, tags, bench)
+        REGISTRY[name] = Query(name, fn, oracle, doc, tags, bench)
         return fn
 
     return deco
 
 
-# The grading driver evaluates queries in dict iteration order and caps
-# the run at 50 queries (rounds 1 and 2 both graded exactly the first-50
-# prefix of this registry's insertion order).  With more than 50
-# registered queries a fixed order leaves the tail permanently
-# uncertified, so load_all() front-loads the queries that have not yet
-# received a green driver correctness row; already-certified queries
-# rotate to the back and across consecutive rounds the union of
-# CORRECTNESS_r*.json files covers the full registry.  The invariant
-# (every query beyond slot 50 holds a prior green row) is pinned by
-# tests/test_registry_contract.py.
-#
-# — round-13 window (50 slots), generated by
-#   tools/gen_driver_window.py --must <the 8 changed-plan queries> —
-# Slots 1-6: never-green — the 5 r12 graduates plus the new
-# dedup_semdedup_cells_pretrained serve twin.
-# Slots 7-14: the changed-plan re-cert cohort (this optimization
-# round's plan changes: the inline-|c|² k-means assignment — every
-# registered query downstream of _assign_cells — plus the pagerank
-# window-degree shape and the SemDeDup c2c truncation).
-# Slots 15-50: the 36 alphabetically-first r8 greens (r8 tier, the
-# rotation target, shrinks 47 -> 11).
-DRIVER_PRIORITY: tuple[str, ...] = (
-    "dedup_simhash64_hamming_pairs",  # slot 1: NEVER
-    "eval_ann_recall_ivf",  # slot 2: NEVER
-    "quality_bigram_surprisal",  # slot 3: NEVER
-    "quality_perplexity_drift",  # slot 4: NEVER
-    "dedup_semdedup_cells_pretrained",  # slot 5: NEVER
-    "eval_cluster_silhouette",  # slot 6: NEVER
-    "graph_pagerank_supply",  # slot 7: re-cert
-    "ann_cosine_topk_ivf",  # slot 8: re-cert
-    "ann_cosine_topk_ivf_pretrained",  # slot 9: re-cert
-    "ann_cosine_topk_ivfpq",  # slot 10: re-cert
-    "dedup_semdedup_cells",  # slot 11: re-cert
-    "sample_cluster_balanced",  # slot 12: re-cert
-    "eval_cluster_balance_audit",  # slot 13: re-cert
-    "eval_ivf_recall",  # slot 14: re-cert
-    "ann_cosine_topk_brute",  # slot 15: green r08
-    "ann_cosine_topk_rowlocal",  # slot 16: green r08
-    "basket_association_rules",  # slot 17: green r08
-    "corpus_collocations_lift",  # slot 18: green r08
-    "corpus_heaps_vocab_growth",  # slot 19: green r08
-    "corpus_quality_filter",  # slot 20: green r08
-    "corpus_source_diversity",  # slot 21: green r08
-    "corpus_stats",  # slot 22: green r08
-    "corpus_tfidf_topterms",  # slot 23: green r08
-    "corpus_token_spectrum",  # slot 24: green r08
-    "corpus_zipf_rank_curve",  # slot 25: green r08
-    "date_spine_generate",  # slot 26: green r08
-    "decontaminate_overlap",  # slot 27: green r08
-    "dedup_connected_components",  # slot 28: green r08
-    "dedup_embedding_cosine",  # slot 29: green r08
-    "dedup_exact_docs",  # slot 30: green r08
-    "dedup_incremental_batch",  # slot 31: green r08
-    "dedup_materialize_corpus",  # slot 32: green r08
-    "dedup_minhash_lsh",  # slot 33: green r08
-    "dedup_source_survival",  # slot 34: green r08
-    "dedup_winnowing_pairs",  # slot 35: green r08
-    "dq_column_profile",  # slot 36: green r08
-    "embed_pq_codes",  # slot 37: green r08
-    "eval_cosine_calibration",  # slot 38: green r08
-    "eval_langid_confusion",  # slot 39: green r08
-    "eval_langid_kappa",  # slot 40: green r08
-    "eval_matryoshka_prefix_recall",  # slot 41: green r08
-    "eval_ndcg_at10",  # slot 42: green r08
-    "graph_supplier_overlap",  # slot 43: green r08
-    "multimodal_frame_overlap",  # slot 44: green r08
-    "sample_priority_weighted",  # slot 45: green r08
-    "sample_target_mix_weights",  # slot 46: green r08
-    "search_bm25_topk",  # slot 47: green r08
-    "search_hybrid_rrf",  # slot 48: green r08
-    "stats_halfsample_ci",  # slot 49: green r08
-    "stats_mannwhitney_doclen",  # slot 50: green r08
-)
+def newest_green_rounds(repo_dir: str, reg: dict[str, Query]) -> dict[str, int]:
+    """query name -> newest round N whose ``CORRECTNESS_rN.json`` row in
+    ``repo_dir`` is green. A row is green when its hash matched or, for
+    an oracle-less (rows-only) query, when it produced rows with no
+    error beyond the expected ``no_oracle`` marker. Names not in
+    ``reg`` are ignored; never-green names are absent."""
+    newest: dict[str, int] = {}
+    for path in glob.glob(os.path.join(repo_dir, "CORRECTNESS_r*.json")):
+        m = re.search(r"_r(\d+)\.json$", path)
+        if not m:
+            continue
+        rnd = int(m.group(1))
+        with open(path) as f:
+            rows = json.load(f)
+        for name, row in rows.items():
+            q = reg.get(name)
+            if q is None:
+                continue
+            green = row.get("hash_match") is True or (
+                q.oracle is None
+                and row.get("spark_rows") is not None
+                and row.get("err") in (None, "no_oracle")
+            )
+            if green:
+                newest[name] = max(newest.get(name, 0), rnd)
+    return newest
 
 
 def load_all() -> dict[str, Query]:
     """Import every query-defining module and return the registry.
 
-    The returned dict is ordered with :data:`DRIVER_PRIORITY` first so the
-    driver's 50-query cap lands on the queries that still need
-    certification; remaining queries follow in registration order.
+    The grading driver evaluates queries in dict iteration order and
+    caps a run at its first 50, so the dict is ordered stalest-first:
+    ascending newest green driver round, never-green queries counting
+    as round 0, ties in registration order. Across rounds every query
+    gets certified. Without round artifacts the order is registration
+    order.
     """
     import lambda_lakehouse_spark.plans.relational  # noqa: F401
     import lambda_lakehouse_spark.plans.star  # noqa: F401
@@ -318,26 +125,5 @@ def load_all() -> dict[str, Query]:
     import lambda_lakehouse_spark.operators.evalstats  # noqa: F401
     import lambda_lakehouse_spark.operators.semantic  # noqa: F401
 
-    ordered: dict[str, Query] = {}
-    for name in DRIVER_PRIORITY:
-        if name in REGISTRY:
-            ordered[name] = REGISTRY[name]
-    for name, q in REGISTRY.items():
-        if name not in ordered:
-            ordered[name] = q
-    return ordered
-
-
-def load_staged() -> dict[str, Query]:
-    """Import all query modules and return the staged (round-6 queue)
-    entries — oracle-tested in pytest, not yet driver-graded."""
-    load_all()
-    return dict(STAGED)
-
-
-def load_queue() -> dict[str, Query]:
-    """Import all query modules and return the build-ahead QUEUE
-    entries — oracle-tested in pytest, promoted to STAGED (≤5/round)
-    at the next round boundary."""
-    load_all()
-    return dict(QUEUE)
+    rounds = newest_green_rounds(_REPO_DIR, REGISTRY)
+    return dict(sorted(REGISTRY.items(), key=lambda kv: rounds.get(kv[0], 0)))

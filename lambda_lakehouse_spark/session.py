@@ -19,7 +19,12 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def _default_cpus() -> int:
+    """Local core count: ``$SPARK_GRAFT_CPUS`` if set, else the CPUs this
+    process may run on. Sets both ``local[N]`` and the default shuffle
+    partition count."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
 def _default_driver_mem() -> str:
@@ -59,9 +64,12 @@ def get_spark(
     tuning trap; skew-join splitting handles hot keys without manual
     salting in the common case.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = _default_cpus()
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
-    n_shuffle = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
+    n_shuffle = shuffle_partitions or cpus
+    # read once: two reads of MemAvailable could disagree and put -Xms
+    # above -Xmx
+    driver_mem = _default_driver_mem()
 
     builder = (
         SparkSession.builder.master(master)
@@ -99,12 +107,12 @@ def get_spark(
         # 29.45 s dedup_jaccard_prefix_filter reading vs its 6.16 s
         # floor). Cluster deployments size executors explicitly; this
         # is local-harness provisioning, overridable via env.
-        .config("spark.driver.memory", _default_driver_mem())
+        .config("spark.driver.memory", driver_mem)
         .config(
             "spark.driver.extraJavaOptions",
             os.environ.get(
                 "SPARK_GRAFT_DRIVER_JVM_OPTS",
-                "-Xms" + _default_driver_mem() + " -XX:+AlwaysPreTouch",
+                "-Xms" + driver_mem + " -XX:+AlwaysPreTouch",
             ),
         )
         .config("spark.ui.enabled", "false")

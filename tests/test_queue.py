@@ -1,6 +1,6 @@
-"""Crafted-fixture semantics tests for the round-9 build-ahead QUEUE
-operators (the full DuckDB-oracle compare runs in
-test_oracle_queries.py::test_queue_query_matches_oracle; these pin the
+"""Crafted-fixture semantics tests for text, corpus, graph, dedup and
+vector-audit operators (the full DuckDB-oracle compare runs in
+test_oracle_queries.py::test_query_matches_oracle; these pin the
 operator semantics on inputs with known closed-form answers)."""
 
 from __future__ import annotations

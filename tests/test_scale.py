@@ -407,7 +407,7 @@ def test_no_forced_broadcast_of_sf_proportional_tables(spark):
     lookups, probe sets) may stay hinted."""
     import re
 
-    from lambda_lakehouse_spark.registry import load_all, load_queue, load_staged
+    from lambda_lakehouse_spark.registry import load_all
 
     big = (
         "lineitem.parquet",
@@ -638,7 +638,7 @@ def test_no_forced_broadcast_of_sf_proportional_tables(spark):
         # out of FileScan lines under a long SPARK_GRAFT_TEST_SF_DIR →
         # silent false negatives in the filename match above
         spark.conf.set("spark.sql.maxMetadataStringLength", "1000")
-        for name, q in sorted({**load_all(), **load_staged(), **load_queue()}.items()):
+        for name, q in sorted(load_all().items()):
             allowed = bounded_by_construction.get(name, set())
             for t, bounded in forced_big_broadcasts(q.spark(spark, SF_DIR)):
                 if t not in allowed:

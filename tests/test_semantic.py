@@ -27,11 +27,9 @@ from lambda_lakehouse_spark.operators.similarity import _flat
 
 
 def _q(name):
-    """Look up a query across the registry and the staged tier — tests
-    written while a query was staged keep working after it graduates."""
-    from lambda_lakehouse_spark.registry import load_all, load_staged
+    from lambda_lakehouse_spark.registry import load_all
 
-    return {**load_all(), **load_staged()}[name]
+    return load_all()[name]
 
 
 def _emb_df(spark, rows):
@@ -158,7 +156,7 @@ def test_matryoshka_recall_one_when_prefix_determines(spark):
     assert all(r.recall == 1.0 and r.n_overlap == MRL_K for r in out)
 
 
-# --- round-7 staged text/stats ops (non-embedding) --------------------
+# --- text/stats ops (non-embedding) ----------------------------------
 
 
 def test_mannwhitney_separated_samples(spark):

@@ -220,3 +220,46 @@ def test_quantize_int8_edge_cases(spark):
     # scale = 2/127; q = [-127, 16, 8] (0.25/scale = 15.875 → 16)
     assert v3.qhash == hashlib.md5(b"-127,16,8").hexdigest()
     assert v3.n_saturated == 1 and v3.roundtrip_ok
+
+
+def test_pretrained_centroids_trains_once_under_concurrent_callers(monkeypatch):
+    """The threaded oracle pool calls pretrained_centroids concurrently:
+    a fresh key must train exactly once, every caller must get that one
+    table, and no caller may hit a KeyError from a racing eviction."""
+    import threading
+    import time
+    from types import SimpleNamespace
+
+    from lambda_lakehouse_spark.operators import similarity
+
+    calls = []
+
+    def slow_train(emb):
+        calls.append(emb)
+        time.sleep(0.2)  # widen the check-then-insert window
+        return object()
+
+    monkeypatch.setattr(similarity, "train_ivf_cells", slow_train)
+    monkeypatch.setattr(similarity, "read_table", lambda spark, sf, t: t)
+    monkeypatch.setattr(similarity, "_CENTROID_CACHE", {("stale-app", "x"): None})
+    fake = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="app-1"))
+    n = 6
+    start = threading.Barrier(n)
+    got, errors = [], []
+
+    def call():
+        start.wait()
+        try:
+            got.append(similarity.pretrained_centroids(fake, "sf-fresh"))
+        except BaseException as e:
+            errors.append(e)
+
+    threads = [threading.Thread(target=call) for _ in range(n)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert not errors
+    assert len(calls) == 1
+    assert len(got) == n and all(g is got[0] for g in got)
+    assert list(similarity._CENTROID_CACHE) == [("app-1", "sf-fresh")]

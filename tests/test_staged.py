@@ -1,7 +1,8 @@
-"""Crafted-fixture semantics tests for the round-6 staged operators
-(BM25's live in test_operators.py). The full DuckDB-oracle compare for
-every staged query runs in test_oracle_queries.py::test_staged_query_
-matches_oracle; these pin the operator semantics independently."""
+"""Crafted-fixture semantics tests for the graph, sampling, near-dup,
+temporal and snapshot operators (BM25's live in test_operators.py).
+The full DuckDB-oracle compare for every query runs in
+test_oracle_queries.py::test_query_matches_oracle; these pin the
+operator semantics independently."""
 
 from __future__ import annotations
 

@@ -23,14 +23,14 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from lambda_lakehouse_spark.registry import load_all, load_queue, load_staged  # noqa: E402
+from lambda_lakehouse_spark.registry import load_all  # noqa: E402
 from lambda_lakehouse_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
     tag, suffix = sys.argv[1], sys.argv[2]
     names = sys.argv[3:]
-    registry = {**load_all(), **load_staged(), **load_queue()}
+    registry = load_all()
     if not names:
         names = sorted(n for n, q in registry.items() if q.bench)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

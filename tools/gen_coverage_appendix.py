@@ -30,72 +30,15 @@ def main() -> None:
             doc = doc[:107] + "..."
         doc = doc.replace("|", "\\|")  # keep markdown table cells intact
         rows.append(f"| `{name}` | {oracle} | {', '.join(q.tags)} | {doc} |")
-    from lambda_lakehouse_spark.registry import load_staged
-
-    staged = load_staged()
-    staged_rows = []
-    for name in sorted(staged):
-        q = staged[name]
-        oracle = "yes" if q.oracle else "rows-only"
-        doc = " ".join(q.doc.split())
-        if len(doc) > 110:
-            doc = doc[:107] + "..."
-        doc = doc.replace("|", "\\|")
-        staged_rows.append(
-            f"| `{name}` | {oracle} | {', '.join(q.tags)} | {doc} |"
-        )
-    staged_section = ""
-    if staged_rows:
-        staged_section = (
-            f"\n### Staged for the next driver-certification round\n\n"
-            f"{len(staged_rows)} queries fully implemented and passing the "
-            "identical DuckDB-oracle gate in pytest "
-            "(tests/test_oracle_queries.py::test_staged_query_matches_oracle) "
-            "but queued out of this round's 50-slot driver window — they "
-            "graduate into the registry at the round boundary.\n\n"
-            "| Query | Oracle | Tags | Description |\n|---|---|---|---|\n"
-            + "\n".join(staged_rows) + "\n"
-        )
-    from lambda_lakehouse_spark.registry import load_queue
-
-    queue = load_queue()
-    queue_rows = []
-    for name in sorted(queue):
-        q = queue[name]
-        oracle = "yes" if q.oracle else "rows-only"
-        doc = " ".join(q.doc.split())
-        if len(doc) > 110:
-            doc = doc[:107] + "..."
-        doc = doc.replace("|", "\\|")
-        queue_rows.append(
-            f"| `{name}` | {oracle} | {', '.join(q.tags)} | {doc} |"
-        )
-    queue_section = ""
-    if queue_rows:
-        queue_section = (
-            f"\n### Build-ahead queue (promotes to staged, <=5/round)\n\n"
-            f"{len(queue_rows)} queries fully implemented and passing the "
-            "identical DuckDB-oracle gate in pytest "
-            "(tests/test_oracle_queries.py::test_queue_query_matches_oracle) "
-            "but built ahead of the staging cap — up to 5 promote to "
-            "STAGED at the next round boundary.\n\n"
-            "| Query | Oracle | Tags | Description |\n|---|---|---|---|\n"
-            + "\n".join(queue_rows) + "\n"
-        )
     appendix = (
         MARKER + "\n\n"
         + f"{len(reg)} registered queries (generated — run "
         "`python tools/gen_coverage_appendix.py` after registry changes).\n\n"
         "| Query | Oracle | Tags | Description |\n|---|---|---|---|\n"
         + "\n".join(rows) + "\n"
-        + staged_section
-        + queue_section
     )
     open("COVERAGE.md", "w").write(head + appendix)
-    print(
-        f"COVERAGE.md appendix regenerated: {len(rows)} rows"
-        + (f" + {len(staged_rows)} staged" if staged_rows else "")
-    )
+    print(f"COVERAGE.md appendix regenerated: {len(rows)} rows")
 
 
 if __name__ == "__main__":

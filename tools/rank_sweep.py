@@ -40,16 +40,12 @@ def main() -> int:
     args = ap.parse_args()
 
     from lambda_lakehouse_spark.session import get_spark
-    from lambda_lakehouse_spark.registry import (
-        load_all,
-        load_queue,
-        load_staged,
-    )
+    from lambda_lakehouse_spark.registry import load_all
 
     spark = get_spark(app_name="rank-sweep")
     spark.sparkContext.setLogLevel("ERROR")
     out: dict[str, object] = {}
-    queries = {**load_all(), **load_staged(), **load_queue()}
+    queries = load_all()
     for name, q in sorted(queries.items()):
         try:
             # One untimed warmup pass for ITERATIVE plans (round-11

@@ -197,11 +197,7 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
-    from lambda_lakehouse_spark.registry import (
-        load_all,
-        load_queue,
-        load_staged,
-    )
+    from lambda_lakehouse_spark.registry import load_all
 
     spark = (
         SparkSession.builder.master("local[8]")
@@ -214,7 +210,7 @@ def main() -> int:
     # undercounts (same setting the forced-broadcast guardrail uses)
     spark.conf.set("spark.sql.maxMetadataStringLength", "1000")
 
-    queries = {**load_all(), **load_staged(), **load_queue()}
+    queries = load_all()
     if args.only:
         queries = {n: q for n, q in queries.items() if n in args.only}
 
