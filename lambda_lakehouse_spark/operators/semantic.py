@@ -58,15 +58,18 @@ from lambda_lakehouse_spark.operators.similarity import (
     N_QUERIES,
     SCALE,
     _assign_cells,
+    _cosine,
     _flat,
     _kmeans_replay_ctes,
+    _norm2,
     _scaled_sum,
     _ssum_sql,
+    _vec,
     cosine_topk,
     train_ivf_cells,
 )
 from lambda_lakehouse_spark.registry import register
-from lambda_lakehouse_spark.sources.readers import read_table
+from lambda_lakehouse_spark.sources.readers import read_table, spread_if_narrow
 
 # SemDeDup threshold, tuned to the synthetic testdata like
 # similarity.NEAR_DUP_COS (random-ish vectors: within-cell cosine
@@ -171,37 +174,38 @@ def semdedup_verdicts(
         # same measurements.
         .localCheckpoint(eager=False)
     )
-    # within-cell pairs a<b above tau — the shuffle key is (cell, pos)
-    pf = flat.join(cells, "vec_id")
-    a = pf.select(
-        "cell", "pos",
-        F.col("vec_id").alias("vec_a"), F.col("val").alias("val_a"),
+    # within-cell pairs a<b above tau — the shuffle key is the cell. The
+    # pair scoring runs in the join's tasks, so the cell shuffle is
+    # spread to every core (AQE would coalesce a small one to a single
+    # partition).
+    pv = spread_if_narrow(
+        emb.select("vec_id", _vec().alias("embedding"))
+        .withColumn("n2", _norm2("vec_id", "embedding"))
+        .join(cells, "vec_id"),
+        "cell",
     )
-    b = pf.select(
-        "cell", "pos",
-        F.col("vec_id").alias("vec_b"), F.col("val").alias("val_b"),
+    a = pv.select(
+        "cell", F.col("vec_id").alias("vec_a"),
+        F.col("embedding").alias("emb_a"), F.col("n2").alias("na2"),
     )
-    dots = (
-        a.join(b, ["cell", "pos"])
-        .where(F.col("vec_a") < F.col("vec_b"))
-        .groupBy("vec_a", "vec_b")
-        .agg(_scaled_sum(F.col("val_a") * F.col("val_b")).alias("dot"))
+    b = pv.select(
+        "cell", F.col("vec_id").alias("vec_b"),
+        F.col("embedding").alias("emb_b"), F.col("n2").alias("nb2"),
     )
-    na = norms.select(F.col("vec_id").alias("vec_a"), F.col("n2").alias("na2"))
-    nb = norms.select(F.col("vec_id").alias("vec_b"), F.col("n2").alias("nb2"))
     edges = (
-        dots.join(na, "vec_a")
-        .join(nb, "vec_b")
+        a.join(b, "cell")
+        .where(F.col("vec_a") < F.col("vec_b"))
         .where(
-            F.col("dot") / F.sqrt(F.col("na2") * F.col("nb2")) >= F.lit(tau)
+            _cosine("vec_a", "emb_a", "na2", "vec_b", "emb_b", "nb2") >= F.lit(tau)
         )
         .select("vec_a", "vec_b")
     )
-    bidir = edges.select(
-        F.col("vec_a").alias("v"), F.col("vec_b").alias("u")
-    ).unionByName(
-        edges.select(F.col("vec_b").alias("v"), F.col("vec_a").alias("u"))
-    )
+    # both directions from one pass over the edges (a union of two
+    # selects would score the within-cell pairs twice)
+    bidir = edges.select(F.inline(F.array(
+        F.struct(F.col("vec_a").alias("v"), F.col("vec_b").alias("u")),
+        F.struct(F.col("vec_b").alias("v"), F.col("vec_a").alias("u")),
+    )))
     cv = c2c.select(F.col("vec_id").alias("v"), F.col("cos_centroid").alias("cc_v"))
     cu = c2c.select(F.col("vec_id").alias("u"), F.col("cos_centroid").alias("cc_u"))
     dropped = (

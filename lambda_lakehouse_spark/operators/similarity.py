@@ -1,16 +1,19 @@
 """Similarity search over embedding columns (beyond-reference).
 
 Approximate-nearest-neighbor building blocks over an
-``array<float>`` column:
+``array<float>`` column. One scorer, ``cosine_topk``, scores every
+embedding against another embedding: each vector stays a whole array
+and the dot product folds inside the row (``zip_with`` + ``aggregate``
+over per-dimension products floored at 1e-15 and integer-summed,
+``_arr_scaled_dot``). Integer sums are order-independent, so scores are
+bit-identical on any engine and ranks cannot be perturbed by sum order.
+The filter-bounded query side is broadcast; pairs come from the
+broadcast cross join or from a candidate relation. A NULL vector, a
+NULL element or a ragged pair raises a named ``EMBEDDING_CONTRACT``
+error carrying the vec_id instead of scoring NULL.
 
-- ``ann_cosine_topk_brute`` — exact cosine top-k, expressed as the
-  *inverted* (position-exploded) formulation: embeddings explode to
-  (vec_id, pos, val) rows, dot products become a position-equi join +
-  groupBy sum. Two properties make this the right shape:
-  (1) cross-engine exactness — sums go through decimal so the score is
-  bit-identical on any engine (sum order can't perturb ranks);
-  (2) scale — the shuffle key is the position (64-way data-parallel),
-  queries broadcast, and no array UDF enters the row path.
+- ``ann_cosine_topk_brute`` — exact cosine top-k against every corpus
+  vector (``ann_cosine_topk_rowlocal`` is its scale-tagged twin).
 - ``ann_cosine_topk_ivf`` — the trained scale path: candidates
   restricted to the query's n_probe nearest k-means cells, cutting the
   candidate set by the cell count; ``_pretrained`` serves against a
@@ -18,20 +21,32 @@ Approximate-nearest-neighbor building blocks over an
 - ``ann_cosine_topk_hyperlsh`` — the training-free scale path:
   multi-probe sign-random-projection buckets (Charikar), md5-derived
   planes so the oracle replays them exactly.
-All bucketed paths share one exact rescoring tail
-(``_rescore_candidates``) so they cannot diverge in scoring.
+The bucketed paths hand their candidates to ``cosine_topk``, so no
+path can diverge in scoring. The threshold-pair queries
+(``dedup_embedding_cosine``, SemDeDup's within-cell pairs) score their
+block self-joins with the same kernel and norm expression.
+
+Vector-vs-centroid, plane and codeword scoring (k-means assignment, LSH
+codes, PQ), per-dimension means, PCA and drift still use the
+position-exploded ``_flat`` relation (vec_id, pos, val).
 
 At 100 TB (billions of vectors) the brute-force variant is the
 per-cell scorer inside IVF, and cells come from a trained coarse
-quantizer; the plumbing (broadcast queries, decimal-exact partial
-sums, row_number top-k) is identical.
+quantizer; the plumbing (broadcast queries, floor-scaled integer dots,
+row_number top-k) is identical.
 
-Measured alternative (rejected): the ``zip_with`` + ``aggregate``
-array dot product — identical values, but ~5× slower at sf0.1
-(higher-order-function lambdas evaluate interpreted, outside
-whole-stage codegen, while the position-explode + hash-agg pipeline
-stays fully codegen'd). If Spark ever compiles HOF lambdas this is
-worth re-measuring.
+Measured on a 4-CPU host at sf0.1 against the former position-exploded
+scorer (``bench.py --single``, best-of-3 in a fresh JVM, two alternating
+rounds): most consumers stay inside the host's run-to-run spread.
+SemDeDup gains (6.8/9.2 -> 5.1/6.0 s; serve twin 4.0/5.2 -> 3.3/3.9 s)
+because its within-cell pairs no longer shuffle 64 rows per vector.
+The many-query panels and the IVF recall audit read 15-27 % slower:
+the zip_with/aggregate lambdas run outside whole-stage codegen and
+need more JIT warm-up than a fresh JVM gives them, and the IVF paths
+scan and shuffle the raw embeddings once more, because the scorer's
+corpus side does not share the assignment's exploded relation. Warm
+in one JVM, the 10-query brute top-k takes the same ~0.45 s either
+way.
 """
 
 from __future__ import annotations
@@ -100,7 +115,7 @@ def _flat(emb: DataFrame) -> DataFrame:
     The scan is spread first (sources/readers.spread_if_narrow): the
     embeddings parquet is ONE split at bench scale, so every
     map-side consumer of the exploded relation — the Lloyd-iteration
-    dot products, norms, candidate rescoring — would otherwise run on
+    dot products, norms, LSH projections — would otherwise run on
     a single core (and ``train_ivf_cells`` would persist a
     1-partition cache that pins every iteration to that core). No-op
     at real scale; keyed by vec_id, the near-universal downstream
@@ -119,30 +134,58 @@ def _flat(emb: DataFrame) -> DataFrame:
     )
 
 
-def _score_topk(dots: DataFrame, k: int) -> DataFrame:
-    """Shared scoring tail for the brute and IVF paths (kept single so
-    they cannot diverge; the probe-all==brute test relies on this):
-    ``dots``=(query_id, neighbor_id, dot, qn2, cn2) — one row per
-    scored pair with BOTH norms already folded into the pair aggregate
-    (round 13): the pos equi-join that feeds each pair's dot sum
-    carries the query's and the neighbor's full per-position values,
-    so ``sum(floor(val·val·SCALE))`` inside the SAME aggregate
-    reproduces the old corpus-wide ``norms`` relation bit-for-bit for
-    exactly the rows that need it. The old shape paid a full-corpus
-    norms aggregate PLUS a corpus-sized shuffle join (nc) per path —
-    at scale, one full pass and one full shuffle of the corpus that
-    this fold removes outright. Deterministic top-k per query via
-    (cos desc, neighbor)."""
-    scored = dots.select(
-        "query_id",
-        "neighbor_id",
-        (F.col("dot") / F.sqrt(F.col("qn2") * F.col("cn2"))).alias("cos_sim"),
+def _arr_scaled_dot(a, b) -> F.Column:
+    """Order-free exact dot of two ``array<double>`` columns:
+    per-dimension floor(x*y*1e15) integers, folded in the row. Each
+    term is the integer the oracles' grouped ``FLOOR(q.val * c.val *
+    1e15)`` sums, so the fold equals their SUM bit-for-bit. Callers cast
+    ``array<float>`` to double once per vector (:func:`_vec`), not once
+    per scored pair."""
+    prods = F.zip_with(
+        a, b, lambda x, y: F.floor(x * y * F.lit(float(SCALE))).cast("long")
     )
-    w = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), "neighbor_id")
     return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rk")
+        F.aggregate(prods, F.lit(0).cast("long"), lambda acc, x: acc + x)
+        .cast("double")
+        / SCALE
+    )
+
+
+def _vec() -> F.Column:
+    """The embedding as ``array<double>`` — the kernel's input type."""
+    return F.col("embedding").cast("array<double>")
+
+
+def _norm2(vec_id: str, e: str) -> F.Column:
+    """|e|² on the row-local kernel. A NULL vector or a NULL element
+    raises a named error carrying the vec_id instead of scoring NULL
+    (lazily: only rows that are actually scored are checked)."""
+    v = F.col(e)
+    bad = v.isNull() | F.exists(v, lambda x: x.isNull())
+    return F.when(
+        bad,
+        F.raise_error(F.concat(
+            F.lit("EMBEDDING_CONTRACT: NULL vector or element at vec_id="),
+            F.col(vec_id).cast("string"),
+        )),
+    ).otherwise(_arr_scaled_dot(v, v))
+
+
+def _cosine(a_id: str, a: str, an2: str, b_id: str, b: str, bn2: str) -> F.Column:
+    """Exact cosine of two embeddings with precomputed :func:`_norm2`
+    norms; vectors of different length raise a named error carrying
+    both vec_ids (zip_with would otherwise pad with NULL and score
+    NULL)."""
+    return F.when(
+        F.size(a) != F.size(b),
+        F.raise_error(F.concat(
+            F.lit("EMBEDDING_CONTRACT: dimension mismatch between vec_id="),
+            F.col(a_id).cast("string"),
+            F.lit(" and vec_id="),
+            F.col(b_id).cast("string"),
+        )),
+    ).otherwise(
+        _arr_scaled_dot(F.col(a), F.col(b)) / F.sqrt(F.col(an2) * F.col(bn2))
     )
 
 
@@ -150,35 +193,48 @@ def cosine_topk(
     emb: DataFrame,
     query_filter,
     k: int = TOP_K,
-    same_label_only: bool = False,
-    diff_label_only: bool = False,
+    pair_filter=None,
+    candidates: DataFrame | None = None,
 ) -> DataFrame:
-    if same_label_only and diff_label_only:
-        raise ValueError("same_label_only and diff_label_only are exclusive")
-    flat = _flat(emb)
-    q = flat.where(query_filter).select(
+    """(query_id, neighbor_id, cos_sim, rk): exact cosine top-k per
+    query, ranked by (cos_sim desc, neighbor_id) — the one scorer every
+    embedding-pair consumer uses.
+
+    The query side is ``emb.where(query_filter)`` with row-local norms,
+    bounded by the filter and broadcast. The corpus side is every
+    vector of ``emb`` (self excluded), spread across cores and scored
+    row-locally. Pairs come from the broadcast cross join or, when
+    ``candidates`` = (query_id, neighbor_id) is given, only from those
+    pairs (the IVF / LSH candidate generators). ``pair_filter`` is a
+    predicate over the pair's ``query_id``, ``q_label``,
+    ``neighbor_id`` and ``label`` (the neighbor's) columns."""
+    q = emb.where(query_filter).select(
         F.col("vec_id").alias("query_id"),
         F.col("label").alias("q_label"),
-        F.col("pos").alias("q_pos"),
-        F.col("val").alias("qval"),
+        _vec().alias("q_emb"),
+    ).withColumn("qn2", _norm2("query_id", "q_emb"))
+    c = spread_if_narrow(emb, "vec_id").select(
+        F.col("vec_id").alias("neighbor_id"), "label", _vec().alias("embedding")
+    ).withColumn("cn2", _norm2("neighbor_id", "embedding"))
+    if candidates is None:
+        pairs = c.crossJoin(F.broadcast(q))
+    else:
+        pairs = candidates.join(c, "neighbor_id").join(F.broadcast(q), "query_id")
+    pairs = pairs.where(F.col("neighbor_id") != F.col("query_id"))
+    if pair_filter is not None:
+        pairs = pairs.where(pair_filter)
+    scored = pairs.select(
+        "query_id",
+        "neighbor_id",
+        _cosine("query_id", "q_emb", "qn2", "neighbor_id", "embedding", "cn2")
+        .alias("cos_sim"),
     )
-    j = flat.join(F.broadcast(q), F.col("pos") == F.col("q_pos"))
-    j = j.where(F.col("vec_id") != F.col("query_id"))
-    if same_label_only:
-        j = j.where(F.col("label") == F.col("q_label"))
-    if diff_label_only:
-        j = j.where(F.col("label") != F.col("q_label"))
-    # Both norms fold into the pair aggregate (see _score_topk): each
-    # (query, corpus-vector) group holds the full per-position row set
-    # of both vectors (the label/identity filters are per-pair, never
-    # per-position), so the qn2/cn2 sums are term-identical to the old
-    # q-side and corpus-wide norm aggregates.
-    dots = j.groupBy("query_id", "vec_id").agg(
-        _scaled_sum(F.col("qval") * F.col("val")).alias("dot"),
-        _scaled_sum(F.col("qval") * F.col("qval")).alias("qn2"),
-        _scaled_sum(F.col("val") * F.col("val")).alias("cn2"),
+    w = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), "neighbor_id")
+    return (
+        scored.withColumn("rk", F.row_number().over(w))
+        .where(F.col("rk") <= k)
+        .select("query_id", "neighbor_id", "cos_sim", "rk")
     )
-    return _score_topk(dots.withColumnRenamed("vec_id", "neighbor_id"), k)
 
 
 def _brute_oracle(same_label: bool, k: int) -> str:
@@ -220,8 +276,9 @@ WHERE rk <= {k}
 @register(
     "ann_cosine_topk_brute",
     _brute_oracle(False, TOP_K),
-    doc="Exact cosine top-k (brute force) via position-exploded join + "
-    "decimal-exact sums — scores bit-identical cross-engine, ranks stable",
+    doc="Exact cosine top-k (brute force): the filter-bounded query set "
+    "broadcast against every corpus vector, floor-scaled integer dots "
+    "folded row-locally — scores bit-identical cross-engine, ranks stable",
     tags=("similarity", "vector"),
     bench=True,
 )
@@ -273,34 +330,26 @@ WHERE dot / sqrt(na.n2 * nb.n2) >= {threshold}
 )
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = read_table(spark, sf_dir, "embeddings")
-    flat = _flat(emb)
-    a = flat.select(
-        F.col("label"), F.col("pos"),
-        F.col("vec_id").alias("vec_a"), F.col("val").alias("val_a"),
+    # spread: the pair scoring runs in the join's streamed-side tasks
+    v = (
+        spread_if_narrow(emb, "vec_id")
+        .select("vec_id", "label", _vec().alias("embedding"))
+        .withColumn("n2", _norm2("vec_id", "embedding"))
     )
-    b = flat.select(
-        F.col("label"), F.col("pos"),
-        F.col("vec_id").alias("vec_b"), F.col("val").alias("val_b"),
+    a = v.select(
+        "label", F.col("vec_id").alias("vec_a"),
+        F.col("embedding").alias("emb_a"), F.col("n2").alias("na2"),
     )
-    dots = (
-        a.join(b, ["label", "pos"])
-        .where(F.col("vec_a") < F.col("vec_b"))
-        .groupBy("vec_a", "vec_b")
-        .agg(_scaled_sum(F.col("val_a") * F.col("val_b")).alias("dot"))
+    b = v.select(
+        "label", F.col("vec_id").alias("vec_b"),
+        F.col("embedding").alias("emb_b"), F.col("n2").alias("nb2"),
     )
-    norms = flat.groupBy("vec_id").agg(
-        _scaled_sum(F.col("val") * F.col("val")).alias("n2")
-    )
-    na = norms.select(F.col("vec_id").alias("vec_a"), F.col("n2").alias("na2"))
-    nb = norms.select(F.col("vec_id").alias("vec_b"), F.col("n2").alias("nb2"))
-    # na/nb hold one norm per vector — corpus-sized, so no broadcast
-    # hint; at billions of vectors these must be shuffle-joinable.
     return (
-        dots.join(na, "vec_a")
-        .join(nb, "vec_b")
+        a.join(b, "label")
+        .where(F.col("vec_a") < F.col("vec_b"))
         .select(
             "vec_a", "vec_b",
-            (F.col("dot") / F.sqrt(F.col("na2") * F.col("nb2"))).alias("cos_sim"),
+            _cosine("vec_a", "emb_a", "na2", "vec_b", "emb_b", "nb2").alias("cos_sim"),
         )
         .where(F.col("cos_sim") >= NEAR_DUP_COS)
     )
@@ -447,41 +496,6 @@ def train_ivf_cells(
     return centroids
 
 
-def _rescore_candidates(flat: DataFrame, cand: DataFrame, query_filter, k: int) -> DataFrame:
-    """Exact decimal-cosine rescoring of a (query_id, neighbor_id)
-    candidate set — the shared tail of every bucketed ANN path (IVF,
-    hyperplane LSH), kept single (like ``_score_topk``) so candidate
-    generators cannot diverge in how they score."""
-    qf = flat.where(query_filter).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("pos").alias("q_pos"),
-        F.col("val").alias("qval"),
-    )
-    nf = flat.select(
-        F.col("vec_id").alias("neighbor_id"), "pos", F.col("val").alias("nval")
-    )
-    # Both norms fold into the pair aggregate (see _score_topk): each
-    # candidate pair's group carries the neighbor's AND the query's
-    # full per-position rows — candidate generators never emit a
-    # (query, neighbor) pair twice (a vector lives in exactly one IVF
-    # cell / LSH bucket), which the dot sum itself already relies on.
-    dots = (
-        cand.join(nf, "neighbor_id")
-        # queries are bounded (the filtered set × dim) → broadcast
-        .join(
-            F.broadcast(qf),
-            (F.col("query_id") == F.col("q_id")) & (F.col("pos") == F.col("q_pos")),
-        )
-        .groupBy("query_id", "neighbor_id")
-        .agg(
-            _scaled_sum(F.col("qval") * F.col("nval")).alias("dot"),
-            _scaled_sum(F.col("qval") * F.col("qval")).alias("qn2"),
-            _scaled_sum(F.col("nval") * F.col("nval")).alias("cn2"),
-        )
-    )
-    return _score_topk(dots, k)
-
-
 def ivf_cosine_topk(
     emb: DataFrame,
     query_filter,
@@ -506,7 +520,7 @@ def ivf_cosine_topk(
         .where(F.col("vec_id") != F.col("query_id"))
         .select("query_id", F.col("vec_id").alias("neighbor_id"))
     )
-    return _rescore_candidates(flat, cand, query_filter, k)
+    return cosine_topk(emb, query_filter, k, candidates=cand)
 
 
 def _kmeans_replay_ctes(
@@ -676,8 +690,8 @@ def ann_cosine_topk_ivf_pretrained(spark: SparkSession, sf_dir: str) -> DataFram
 # hyperplanes hash each vector to a b-bit bucket (bit_p = sign of the
 # projection onto plane p — Charikar, STOC 2002: P[bits agree] =
 # 1 - angle/pi). Queries probe their own bucket plus the b buckets at
-# Hamming distance 1 (multi-probe LSH), and candidates are rescored with
-# the same decimal-exact cosine as every other path. No training step —
+# Hamming distance 1 (multi-probe LSH), and candidates are scored by
+# the same exact cosine_topk as every other path. No training step —
 # the trade vs IVF: zero build cost and data-independent buckets, at the
 # price of lower recall per candidate touched.
 #
@@ -760,9 +774,9 @@ def hyperlsh_cosine_topk(
     # production this is the persisted LSH index (one narrow (vec_id,
     # bucket) row per vector).
     codes = hyperplane_codes(flat, _hyperplanes(spark, n_planes)).localCheckpoint()
-    qcodes = codes.join(
-        flat.where(query_filter).select("vec_id").distinct(), "vec_id"
-    ).select(F.col("vec_id").alias("query_id"), "bucket")
+    qcodes = codes.join(emb.where(query_filter).select("vec_id"), "vec_id").select(
+        F.col("vec_id").alias("query_id"), "bucket"
+    )
     # multi-probe: own bucket + b Hamming-1 flips (b+1 probes/query)
     probe_arr = F.array(
         F.col("bucket"),
@@ -781,7 +795,7 @@ def hyperlsh_cosine_topk(
         .where(F.col("vec_id") != F.col("query_id"))
         .select("query_id", F.col("vec_id").alias("neighbor_id"))
     )
-    return _rescore_candidates(flat, cand, query_filter, k)
+    return cosine_topk(emb, query_filter, k, candidates=cand)
 
 
 def _hyperlsh_oracle(
@@ -1060,9 +1074,9 @@ def ts_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # this module's fixed-point trick (sum of floor(val * 1e15) as exact
 # int64, one double divide at the end) so the order-sensitive float
 # sum is order-independent and both engines agree bit-for-bit. At
-# 100 TB this is one position-exploded aggregate — the same
-# inverted-by-dimension shuffle the ANN scorers ride, map-side
-# combined, 64 output rows regardless of corpus size.
+# 100 TB this is one position-exploded aggregate — an
+# inverted-by-dimension shuffle, map-side combined, 64 output rows
+# regardless of corpus size.
 
 
 def embedding_drift(emb: DataFrame, batch_expr) -> DataFrame:
@@ -1150,8 +1164,8 @@ def embed_drift_by_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
 # every conforming engine, so the whole eigenvector hash-certifies.
 # The start vector is the exact constant 1/8 = 0.125 (64 dims).
 #
-# Scale: X stays position-exploded (the same layout every ANN scorer
-# here uses); each product shuffles once on its key, map-side
+# Scale: X stays position-exploded (the layout k-means assignment
+# and the LSH codes use); each product shuffles once on its key, map-side
 # combined; v/norm are dimension-sized (64 rows / 1 row) broadcasts.
 # More iterations = more unrolled stages; for many components, deflate
 # and repeat (documented, not implemented — one direction suffices to
@@ -1300,14 +1314,14 @@ def embed_pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
 # geometry).
 #
 # Plan shape: the scoring front end IS ann_cosine_topk_brute's
-# position-exploded exact-cosine pipeline (cosine_topk — decimal-exact
-# partial sums, broadcast query side, per-query bounded top-k window);
+# exact-cosine scorer (cosine_topk — floor-scaled row-local dots,
+# broadcast query side, per-query bounded top-k window);
 # the eval tail adds one ≤k-row-per-query vote aggregate, a
 # per-query argmax over ≤|labels| rows, and a |labels|-row final
 # aggregate. At 100 TB the probe set is a sampled slice (here every
 # 5th vector — deterministic, oracle-replayable) and the front end
-# swaps to the IVF candidate generator with the identical rescoring
-# tail — the eval tail is unchanged.
+# swaps to the IVF candidate generator through cosine_topk's
+# candidates argument — the eval tail is unchanged.
 #
 # Cross-engine exactness: votes and corrects are integers; accuracy is
 # one double division of exact BIGINTs. Vote ties break by (count
@@ -1670,7 +1684,7 @@ def eval_cosine_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 # return? This is THE number an ANN deployment is tuned against
 # (recall@k as a function of n_probe); certifying it end-to-end also
 # locks the trained quantizer, both candidate generators, and the
-# shared rescoring tail into one cross-engine-exact relation.
+# shared scorer into one cross-engine-exact relation.
 #
 # Both rankings ride certified paths (ivf_cosine_topk and
 # cosine_topk); the comparison is a bounded join of two
@@ -1776,88 +1790,23 @@ def eval_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Row-local exact cosine top-k via higher-order functions
-# ---------------------------------------------------------------------------
-#
-# The alternative front end to the position-exploded brute plan: keep
-# every embedding as an ARRAY and compute dot products and norms
-# INSIDE the row with zip_with/aggregate — no 64x posexplode, no
-# (query, vec) dot-product aggregate exchange. The corpus flows
-# through exactly ONE narrow pass of |queries| x |corpus| rows (the
-# bounded query side is broadcast), then straight into the per-query
-# top-k. Same floor-scaled integer arithmetic as _scaled_sum — each
-# per-dimension product is floored at 1e-15 and integer-summed by the
-# aggregate fold, so the totals are bit-identical to the grouped sums
-# and the query shares the brute oracle verbatim.
-#
-# Trade-off vs cosine_topk: the exploded plan reuses one flat relation
-# across many consumers (norms, IVF training, drift) — right when
-# several vector ops share a scan; this shape wins when the dot
-# product is the whole job, which is the serve-path common case.
-
-
-def _arr_scaled_dot(a, b) -> F.Column:
-    """Order-free exact dot: per-dim floor(x*y*1e15) ints, folded."""
-    prods = F.zip_with(
-        a,
-        b,
-        lambda x, y: F.floor(
-            x.cast("double") * y.cast("double") * F.lit(float(SCALE))
-        ).cast("long"),
-    )
-    return (
-        F.aggregate(prods, F.lit(0).cast("long"), lambda acc, x: acc + x)
-        .cast("double")
-        / SCALE
-    )
-
-
-def cosine_topk_rowlocal(emb: DataFrame, query_filter, k: int = TOP_K) -> DataFrame:
-    """(query_id, neighbor_id, cos_sim, rk): exact cosine top-k with
-    all vector arithmetic row-local; value-identical to cosine_topk."""
-    n2 = _arr_scaled_dot(F.col("embedding"), F.col("embedding"))
-    q = emb.where(query_filter).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        n2.alias("qn2"),
-    )
-    cand = (
-        emb.select("vec_id", "embedding", n2.alias("cn2"))
-        .crossJoin(F.broadcast(q))
-        .where(F.col("vec_id") != F.col("query_id"))
-    )
-    scored = cand.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        (
-            _arr_scaled_dot(F.col("embedding"), F.col("q_emb"))
-            / F.sqrt(F.col("qn2") * F.col("cn2"))
-        ).alias("cos_sim"),
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), "neighbor_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rk")
-    )
+# The scale-tagged twin of ann_cosine_topk_brute: same scorer, same oracle.
 
 
 @register(
     "ann_cosine_topk_rowlocal",
     _brute_oracle(False, TOP_K),
-    doc="Exact cosine top-k with ROW-LOCAL vector arithmetic: "
+    doc="Exact cosine top-k with row-local vector arithmetic: "
     "zip_with/aggregate fold the floor-scaled per-dimension products "
-    "inside each row — no 64x posexplode, no dot-product aggregate "
-    "exchange; one narrow broadcast pass per bounded query set, then "
-    "the per-query top-k. Bit-identical to the exploded brute plan "
-    "(same oracle), trading scan reuse for minimal data movement",
+    "inside each row — one narrow broadcast pass per bounded query set, "
+    "then the per-query top-k. The same scorer and plan as "
+    "ann_cosine_topk_brute (same oracle); kept as its scale-tagged twin",
     tags=("similarity", "vector", "scale"),
     bench=True,
 )
 def ann_cosine_topk_rowlocal(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = read_table(spark, sf_dir, "embeddings")
-    return cosine_topk_rowlocal(emb, F.col("vec_id") < N_QUERIES)
+    return cosine_topk(emb, F.col("vec_id") < N_QUERIES)
 
 
 # ---------------------------------------------------------------------------
@@ -1938,8 +1887,9 @@ FROM neg n JOIN pos p USING (query_id)
 def mine_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = read_table(spark, sf_dir, "embeddings")
     qf = F.col("vec_id") < N_QUERIES
-    negs = cosine_topk(emb, qf, k=TOP_K, diff_label_only=True)
-    pos = cosine_topk(emb, qf, k=1, same_label_only=True).select(
+    same = F.col("label") == F.col("q_label")
+    negs = cosine_topk(emb, qf, k=TOP_K, pair_filter=~same)
+    pos = cosine_topk(emb, qf, k=1, pair_filter=same).select(
         "query_id", F.col("cos_sim").alias("pos_sim")
     )
     return negs.join(F.broadcast(pos), "query_id").select(
@@ -1968,10 +1918,10 @@ def mine_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 # aligned embedding space). Queries are the bounded even-side set
 # (vec_id < BITEXT_Q); the forward pass scores them against the whole
 # odd side, the backward pass scores the <= BITEXT_Q/2 matched odd
-# vectors against the whole even side. Sides are disjoint by parity,
-# so no self-pair filter is needed.
+# vectors against the whole even side. Both passes are cosine_topk
+# with k=1 and a parity pair filter.
 #
-# Exactness: floor-scaled integer dots (_scaled_sum), one double
+# Exactness: floor-scaled integer dots, one double
 # cosine per pair, top-1 by (cos DESC, id) — a total order; the margin
 # is one fixed double expression with the <= 0 denominator guarded to
 # 0 identically on both engines.
@@ -1979,74 +1929,26 @@ def mine_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Scale: both passes are bounded-query-side broadcasts over a single
 # corpus scan each — linear. Full-corpus mining (every x a query)
 # swaps the dense candidate side for the IVF cell generator
-# (ivf_cosine_topk's qcells/cells join) exactly like the ANN serve
-# path; the margin/mutual tail is unchanged.
+# (ivf_cosine_topk's qcells/cells join as cosine_topk candidates)
+# exactly like the ANN serve path; the margin/mutual tail is unchanged.
 # ---------------------------------------------------------------------------
 
 BITEXT_Q = 48  # queries: even vec_id < BITEXT_Q (24 vectors)
-
-
-def _dir_top1(flat: DataFrame, norms: DataFrame, q: DataFrame, cand_filter):
-    """Top-1 neighbor per bounded exploded query side ``q`` =
-    (query_id, q_pos, qval) among ``flat`` rows passing
-    ``cand_filter``: (query_id, neighbor_id, cos_sim)."""
-    cand = flat.where(cand_filter)
-    dots = (
-        cand.join(F.broadcast(q), F.col("pos") == F.col("q_pos"))
-        .groupBy("query_id", "vec_id")
-        .agg(_scaled_sum(F.col("qval") * F.col("val")).alias("dot"))
-    )
-    nq = q.groupBy("query_id").agg(
-        _scaled_sum(F.col("qval") * F.col("qval")).alias("qn2")
-    )
-    nc = norms.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("n2").alias("cn2")
-    )
-    scored = (
-        dots.withColumnRenamed("vec_id", "neighbor_id")
-        .join(F.broadcast(nq), "query_id")
-        .join(nc, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            (F.col("dot") / F.sqrt(F.col("qn2") * F.col("cn2"))).alias(
-                "cos_sim"
-            ),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), "neighbor_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") == 1)
-        .select("query_id", "neighbor_id", "cos_sim")
-    )
 
 
 def bitext_margin_top1(emb: DataFrame, n_queries: int = BITEXT_Q) -> DataFrame:
     """(query_id, match_id, cos_xy, cos_y_best, margin, mutual): the
     ratio-margin-scored mutual-top-1 mining table for the bounded
     even-side query set."""
-    flat = _flat(emb).select("vec_id", "pos", "val")
-    norms = flat.groupBy("vec_id").agg(
-        _scaled_sum(F.col("val") * F.col("val")).alias("n2")
-    ).localCheckpoint(eager=False)
     even = F.col("vec_id") % 2 == 0
-    fq = flat.where(even & (F.col("vec_id") < n_queries)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("pos").alias("q_pos"),
-        F.col("val").alias("qval"),
-    )
-    # <=n_queries/2-row forward result feeds the matched-id set, the
-    # backward pass, AND the final join — truncate so the whole
-    # forward corpus pass executes once. Together with the vec-grain
-    # norms truncation above (narrow (vec_id, n2) rows — NOT the
-    # exploded _flat relation the scan-audit docstring warns about),
-    # the sf0.1 A/B chain was 3.11 -> 2.32 -> 1.77 s best-of-3 and
-    # the executed-plan scan count dropped 16 -> 4 -> 3 (the residual
-    # 3 are real passes: the pruned query-side read and one candidate
-    # scan per direction — dispositioned in tools/scan_audit.py).
+    # the <=n_queries/2-row forward result feeds the matched-id set, the
+    # backward pass AND the final join — truncate so the forward corpus
+    # pass executes once
     fwd = (
-        _dir_top1(flat, norms, fq, ~even)
+        cosine_topk(
+            emb, even & (F.col("vec_id") < n_queries), k=1,
+            pair_filter=F.col("neighbor_id") % 2 == 1,
+        )
         .select(
             "query_id",
             F.col("neighbor_id").alias("match_id"),
@@ -2054,13 +1956,15 @@ def bitext_margin_top1(emb: DataFrame, n_queries: int = BITEXT_Q) -> DataFrame:
         )
         .localCheckpoint(eager=False)
     )
-    ys = fwd.select(F.col("match_id").alias("vec_id")).distinct()
-    bq = flat.join(F.broadcast(ys), "vec_id").select(
-        F.col("vec_id").alias("query_id"),
-        F.col("pos").alias("q_pos"),
-        F.col("val").alias("qval"),
-    )
-    bwd = _dir_top1(flat, norms, bq, even).select(
+    # backward queries: the matched odd vectors, flagged by a join with
+    # the bounded match set
+    ys = fwd.select(
+        F.col("match_id").alias("vec_id"), F.lit(True).alias("matched")
+    ).distinct()
+    flagged = emb.join(F.broadcast(ys), "vec_id", "left")
+    bwd = cosine_topk(
+        flagged, F.col("matched"), k=1, pair_filter=F.col("neighbor_id") % 2 == 0
+    ).select(
         F.col("query_id").alias("match_id"),
         F.col("neighbor_id").alias("back_id"),
         F.col("cos_sim").alias("cos_y_best"),

@@ -235,9 +235,11 @@ def test_aqe_skew_join_engages_on_hot_key(spark):
 
 def test_no_pathological_join_plans(spark, built_queries):
     """Guardrail: no registry query may plan a CartesianProduct, and
-    BroadcastNestedLoopJoin is allowed only where a deliberate 1-row
-    broadcast cross join exists (simhash's reference-signature join).
-    Catches accidental non-equi joins before they reach a cluster."""
+    BroadcastNestedLoopJoin is allowed only where a deliberate bounded
+    broadcast cross join exists (a 1-row aggregate such as simhash's
+    reference signature, or the exact-cosine scorer's filter-bounded
+    query side). Catches accidental non-equi joins before they reach a
+    cluster."""
     # both entries join a deliberate 1-row broadcast side (simhash's
     # reference signature; the sketch query's merge-identity flag) —
     # bounded by aggregation, harmless at any scale
@@ -279,8 +281,16 @@ def test_no_pathological_join_plans(spark, built_queries):
         "search_hybrid_rrf",  # BM25's 1-row (N, avgdl) stats broadcast
         "eval_langid_kappa",  # 1-row total/tp/chance broadcasts
         "stats_halfsample_ci",  # 1-row variance-of-means broadcast
-        "eval_ivf_recall",  # 1-row macro-recall totals broadcast
+        # 1-row macro-recall totals + filter-bounded query-side broadcast
+        "eval_ivf_recall",
         "ann_cosine_topk_rowlocal",  # filter-bounded query-side broadcast
+        "ann_cosine_topk_brute",  # filter-bounded query-side broadcast
+        "eval_knn_label_accuracy",  # filter-bounded query-side broadcast
+        "eval_cosine_calibration",  # filter-bounded query-side broadcast
+        "eval_embedding_hubness",  # filter-bounded query-side broadcast
+        "eval_matryoshka_prefix_recall",  # filter-bounded query-side broadcast
+        "mine_hard_negatives",  # filter-bounded query-side broadcast
+        "mine_bitext_margin",  # filter-bounded query-side broadcast
         "text_bpe_train_merges",  # 1-row merge-rule broadcast per round
         "sample_dsir_hashed_ngrams",  # 1-row totals + 1-row tau broadcasts
         "eval_dsir_target_shift",  # 1-row totals/tau + 1-row TV fold

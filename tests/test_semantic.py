@@ -757,22 +757,100 @@ def test_ivf_recall_bounds_and_probe_all_is_exact(spark):
     assert full == brute
 
 
-def test_rowlocal_cosine_equals_exploded_brute(spark):
-    """The zip_with/aggregate row-local plan returns bit-identical
-    (query, neighbor, cos, rank) tuples to the position-exploded
-    cosine_topk — same floor-scaled integers, different data flow."""
-    from lambda_lakehouse_spark.operators.similarity import (
-        N_QUERIES,
-        cosine_topk,
-        cosine_topk_rowlocal,
-    )
-    from lambda_lakehouse_spark.sources.readers import read_table
+def _floor_scaled_cos(x, y):
+    """Pure-Python reference of the scorer's arithmetic: per-dimension
+    products floored at 1e-15, integer-summed, one double divide."""
+    import math
 
-    emb = read_table(spark, "/root/testdata/sf0.001", "embeddings")
-    qf = F.col("vec_id") < N_QUERIES
-    a = sorted(tuple(r) for r in cosine_topk(emb, qf).collect())
-    b = sorted(tuple(r) for r in cosine_topk_rowlocal(emb, qf).collect())
-    assert a == b
+    import numpy as np
+
+    def dot(a, b):
+        a, b = (np.asarray(v, dtype=np.float32).tolist() for v in (a, b))
+        return sum(math.floor(p * q * 1e15) for p, q in zip(a, b)) / 1e15
+
+    return dot(x, y) / math.sqrt(dot(x, x) * dot(y, y))
+
+
+def _reference_topk(rows, queries, k, candidates=None):
+    """{(query_id, neighbor_id, cos_sim, rk)} by brute force over
+    ``rows`` = [(vec_id, embedding, label)], ranked (cos desc, id)."""
+    out = set()
+    for qid, qv, _ in rows:
+        if qid not in queries:
+            continue
+        scored = sorted(
+            (-_floor_scaled_cos(qv, v), vid)
+            for vid, v, _ in rows
+            if vid != qid and (candidates is None or (qid, vid) in candidates)
+        )
+        out |= {(qid, vid, -neg, rk) for rk, (neg, vid) in enumerate(scored[:k], 1)}
+    return out
+
+
+def test_cosine_topk_matches_floor_scaled_reference(spark):
+    """The one exact-cosine scorer against a pure-Python floor-scaled
+    reference on crafted vectors: an exact cosine tie is won by the
+    lower neighbor_id, the k boundary cuts inside a tie, and the
+    candidate path returns brute force restricted to the candidates."""
+    from lambda_lakehouse_spark.operators.similarity import cosine_topk
+
+    rows = [
+        (0, _vec((0, 1.0), (1, 0.5)), 1),
+        (1, _vec((0, 2.0), (1, 1.0)), 1),  # parallel to 0: cos 1
+        (2, _vec((0, 0.25), (1, 0.125)), 2),  # parallel to 0: exact tie with 1
+        (3, _vec((0, 0.3), (2, 0.9)), 2),
+        (4, _vec((1, -1.0), (3, 0.7)), 3),
+        (5, _vec((0, 0.6), (1, 0.1), (3, 0.2)), 3),
+        (6, _vec((2, 1.0)), 1),
+    ]
+    emb = _emb_df(spark, rows)
+    qf = F.col("vec_id") < 2
+
+    def got(df):
+        return {tuple(r) for r in df.collect()}
+
+    # k=1 on query 0: neighbors 1 and 2 tie at cos 1.0 — the lower id wins
+    top1 = got(cosine_topk(emb, qf, k=1))
+    assert (0, 1, 1.0, 1) in top1
+    assert top1 == _reference_topk(rows, {0, 1}, 1)
+    for k in (2, 3, len(rows)):
+        assert got(cosine_topk(emb, qf, k=k)) == _reference_topk(rows, {0, 1}, k)
+    # k boundary: exactly k rows per query, rk 1..k
+    assert sorted(r[3] for r in got(cosine_topk(emb, qf, k=3)) if r[0] == 0) == [1, 2, 3]
+
+    cand_pairs = {(0, 2), (0, 4), (0, 6), (1, 0), (1, 5)}
+    cands = spark.createDataFrame(
+        sorted(cand_pairs), "query_id bigint, neighbor_id bigint"
+    )
+    assert got(cosine_topk(emb, qf, k=2, candidates=cands)) == _reference_topk(
+        rows, {0, 1}, 2, cand_pairs
+    )
+
+
+@pytest.mark.parametrize(
+    "case",
+    ["null_vector", "null_element", "ragged"],
+)
+def test_embedding_contract_violations_raise_named_error(spark, case):
+    """A NULL vector, a NULL element or a vector of another length must
+    fail loudly with the offending vec_id — through the top-k scorer
+    and through the threshold-pair path (dedup_embedding_cosine) —
+    instead of scoring NULL or silently dropping positions."""
+    from lambda_lakehouse_spark.operators.similarity import cosine_topk
+
+    bad = {
+        "null_vector": None,
+        "null_element": [1.0, None] + [0.5] * 62,
+        "ragged": [1.0] * 63,
+    }[case]
+    rows = [(0, _vec((0, 1.0)), 1), (1, _vec((1, 1.0)), 1), (7, bad, 1)]
+    emb = _emb_df(spark, rows)
+    with pytest.raises(Exception, match=r"EMBEDDING_CONTRACT.*vec_id=7"):
+        cosine_topk(emb, F.col("vec_id") == 0, k=3).collect()
+    with tempfile.TemporaryDirectory() as d:
+        emb.write.parquet(f"{d}/embeddings.parquet")
+        with pytest.raises(Exception, match=r"EMBEDDING_CONTRACT.*vec_id=7"):
+            _q("dedup_embedding_cosine").spark(spark, d).collect()
 
 
 def test_bpe_train_merges_hand_computed(spark):

@@ -676,10 +676,11 @@ def test_hard_negatives_crafted_margins(spark):
         rows, "vec_id long, embedding array<float>, label int"
     )
     qf = F.col("vec_id") < 1
-    negs = cosine_topk(emb, qf, k=3, diff_label_only=True).collect()
+    same = F.col("label") == F.col("q_label")
+    negs = cosine_topk(emb, qf, k=3, pair_filter=~same).collect()
     got = [(r.neighbor_id, r.rk) for r in sorted(negs, key=lambda r: r.rk)]
     assert got == [(20, 1), (21, 2), (22, 3)]
-    pos = cosine_topk(emb, qf, k=1, same_label_only=True).collect()
+    pos = cosine_topk(emb, qf, k=1, pair_filter=same).collect()
     assert [r.neighbor_id for r in pos] == [10]
     # margin ordering: the hard negative has the smallest margin
     pos_sim = pos[0].cos_sim

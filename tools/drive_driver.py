@@ -1,6 +1,8 @@
 """Simulate the driver: plain SparkSession, import __spark_entry__,
 smoke entry(), run every query vs its DuckDB oracle at sf0.01."""
-import sys, math, datetime as dt
+import os
+import sys
+
 import duckdb
 from pyspark.sql import SparkSession
 
@@ -8,41 +10,32 @@ spark = SparkSession.builder.master("local[8]").appName("driver-sim").getOrCreat
 spark.sparkContext.setLogLevel("ERROR")
 print("session timezone conf:", spark.conf.get("spark.sql.session.timeZone"))
 
-sys.path.insert(0, "/root/repo")
-import __spark_entry__ as e
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+import __spark_entry__ as e  # noqa: E402
+from lambda_lakehouse_spark.__main__ import TABLES, _canon_rows  # noqa: E402
 
 df = e.entry(spark)
 rows = df.collect()
 print(f"entry(): {len(rows)} rows, schema: {[f.name for f in df.schema.fields]}")
-assert len(rows) >= 0
+assert len(rows) > 0, "entry() returned no rows"
 
 sf = "/root/testdata/sf0.01"
 con = duckdb.connect()
-for t in ["region","nation","customer","supplier","part","orders","lineitem","events","documents","embeddings"]:
+for t in TABLES:
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')")
-
-def canon(v):
-    if v is None: return "NULL"
-    if isinstance(v, bool): return "true" if v else "false"
-    if isinstance(v, float): return "NaN" if math.isnan(v) else repr(v)
-    if isinstance(v, dt.datetime): return v.isoformat(sep=" ")
-    if isinstance(v, dt.date): return v.isoformat()
-    return str(v)
 
 qs, oracles = e.queries(), e.oracle_sql()
 fails = 0
 for name, fn in sorted(qs.items()):
     sdf = fn(spark, sf)
     cols = sdf.columns
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    s_rows = sorted(tuple(canon(r[i]) for i in order) for r in sdf.collect())
+    s_rows = _canon_rows(cols, sdf.collect())
     if name not in oracles:
         print(f"  {name}: rows-only, {len(s_rows)} rows")
         continue
     cur = con.execute(oracles[name])
     o_cols = [d[0] for d in cur.description]
-    o_order = sorted(range(len(o_cols)), key=lambda i: o_cols[i])
-    o_rows = sorted(tuple(canon(r[i]) for i in o_order) for r in cur.fetchall())
+    o_rows = _canon_rows(o_cols, cur.fetchall())
     ok = (sorted(cols) == sorted(o_cols)) and s_rows == o_rows
     print(f"  {name}: {'MATCH' if ok else 'MISMATCH'} ({len(s_rows)} vs {len(o_rows)} rows)")
     if not ok:
