@@ -3,9 +3,13 @@
 This is the user-facing pipeline API — a user of the reference who
 today submits ``airflow/dags/spark_code/{stg,curated}/*.py`` jobs
 switches to these functions. Each function cites the reference job it
-re-expresses (file:line into /root/reference/); orchestration honors
+re-expresses (file:line into the reference); orchestration honors
 the DAG fan-in (``airflow/dags/lakehouse_dags.py:100-170``:
-stg per country → 5 dims in parallel → fact last).
+stg per country → 5 dims in parallel → fact last). All staging
+batches of one call land in one partitioned write; the five dim
+writes run as concurrent Spark jobs from one thread each; the fact
+runs once every dim has landed (``run_pipeline_resilient`` gives the
+failure order and the marker rule).
 
 Scale posture: stg is a narrow projection (no shuffle); each dim is
 one distinct/groupBy shuffle over the stg subset of its columns; the
@@ -472,11 +476,30 @@ def run_pipeline_resilient(
     skips completed stages (``python_ingestion/vnstock.py:184-244``'s
     resumable-ingest pattern, applied to the curated DAG).
 
+    The DAG runs as the reference draws it (``lakehouse_dags.py:161-167``):
+    - stg: the batches that are not skipped are unioned and written by
+      ONE ``write_partitioned``, which is the retry unit (staging plans
+      are rebuilt on each attempt). A ``(country, batch_date)`` given
+      twice in one call keeps its last batch, as successive overwrites
+      would. One write, not one per batch: concurrent writes into one
+      table path share its ``_temporary`` directory, and the first
+      write of a new table runs in static mode, which truncates it.
+    - dims: the five plans are built (lazily) on the calling thread;
+      their writes run as concurrent Spark jobs, one thread per dim,
+      each with its own retry loop. Each thread inherits the caller's
+      job group and tags. A dim whose plan fails to build fails
+      without a retry (building does no IO). Once every dim has
+      finished, the first failure in DAG order (date, exchange,
+      currency, trading status, company) is raised; the dims that
+      landed keep their markers.
+    - fact: runs only when all five dims have landed.
+
     Every stage write is idempotent (dynamic partition overwrite /
     static dim overwrite), so retry-after-partial-write is safe: the
-    stage re-executes and overwrites its own output. Markers are
-    committed only AFTER a stage's write returns, giving at-least-once
-    execution with exactly-once effect. Marker state lives under
+    stage re-executes and overwrites its own output. A stage's marker
+    (each stg batch's, each dim's, the fact's) is committed only AFTER
+    the write that carries it returns, giving at-least-once execution
+    with exactly-once effect. Marker state lives under
     ``{out_dir}/_pipeline_state`` — at cluster scale that directory sits
     in the same store as the data (the same pattern as Spark's own
     ``_SUCCESS`` files); here it is plain-file IO because ``out_dir``
@@ -490,48 +513,59 @@ def run_pipeline_resilient(
       invalidates (re-keys) every downstream marker and dims/fact are
       rebuilt over the grown staging table — stale markers can never
       mask new upstream data;
-    - only markers that existed BEFORE this invocation cause skips: a
-      stage name repeated within one call re-executes (last write wins,
-      matching ``run_pipeline``'s overwrite semantics).
+    - only markers that existed BEFORE this invocation cause skips.
     """
     import hashlib
     import os
     import time
+    from concurrent.futures import ThreadPoolExecutor
+    from functools import reduce
+
+    from pyspark import inheritable_thread_target
 
     state_dir = os.path.join(out_dir, "_pipeline_state")
     os.makedirs(state_dir, exist_ok=True)
     pre_existing = set(os.listdir(state_dir))
-    ran_this_call: set[str] = set()
 
-    def _run_stage(stage: str, fn) -> None:
-        if resume and stage not in ran_this_call and f"{stage}.done" in pre_existing:
-            return
+    def _pending(stage: str) -> bool:
+        return not (resume and f"{stage}.done" in pre_existing)
+
+    def _retried(fn) -> None:
         attempt = 0
         while True:
             try:
                 fn()
-                break
+                return
             except Exception:
                 attempt += 1
                 if attempt > retries:
                     raise
                 if retry_delay_s:
                     time.sleep(retry_delay_s)
-        ran_this_call.add(stage)
+
+    def _mark(stage: str) -> None:
         with open(os.path.join(state_dir, f"{stage}.done"), "w") as f:
             f.write("done\n")
 
-    for country, raw, batch_date in raw_batches:
-        _run_stage(
-            f"stg_{country}_{batch_date}",
-            lambda country=country, raw=raw, batch_date=batch_date: (
-                write_partitioned(
-                    STG_JOBS[country](raw, batch_date),
-                    f"{out_dir}/stg_stock",
-                    partition_by=("country", "datadate"),
-                )
-            ),
+    # last batch wins per (country, batch_date); dict keeps first-seen order
+    stg_batches = {
+        f"stg_{country}_{batch_date}": (country, raw, batch_date)
+        for country, raw, batch_date in raw_batches
+    }
+    stg_batches = {s: b for s, b in stg_batches.items() if _pending(s)}
+    if stg_batches:
+        _retried(
+            lambda: write_partitioned(
+                reduce(
+                    DataFrame.unionByName,
+                    [STG_JOBS[c](raw, d) for c, raw, d in stg_batches.values()],
+                ),
+                f"{out_dir}/stg_stock",
+                partition_by=("country", "datadate"),
+            )
         )
+        for stage in stg_batches:
+            _mark(stage)
     # downstream marker key: every stg marker now in the store (prior
     # runs' plus this one's) — new upstream data means a new signature
     stg_sig = hashlib.md5(
@@ -553,30 +587,48 @@ def run_pipeline_resilient(
         "dim_trading_status": lambda: dim_trading_status(stg),
         "dim_company": lambda: dim_company(stg),
     }
+    built: dict[str, DataFrame] = {}
+    errors: dict[str, Exception] = {}
     for name, build in dim_builders.items():
-        _run_stage(
-            f"{name}@{stg_sig}",
-            lambda name=name, build=build: build()
-            .write.mode("overwrite")
-            .parquet(f"{out_dir}/{name}"),
-        )
+        if _pending(f"{name}@{stg_sig}"):
+            try:
+                built[name] = build()
+            except Exception as e:
+                errors[name] = e
+
+    def _write_dim(name: str) -> None:
+        _retried(lambda: built[name].write.mode("overwrite").parquet(f"{out_dir}/{name}"))
+        _mark(f"{name}@{stg_sig}")
+
+    if built:
+        inherit = inheritable_thread_target(spark)
+        with ThreadPoolExecutor(max_workers=len(built)) as pool:
+            futures = {n: pool.submit(inherit(_write_dim), n) for n in built}
+        for n, f in futures.items():
+            if f.exception() is not None:
+                errors[n] = f.exception()
+    for name in dim_builders:
+        if name in errors:
+            raise errors[name]
     loaded = {n: spark.read.parquet(f"{out_dir}/{n}") for n in dim_builders}
 
-    _run_stage(
-        f"fact_stock_daily@{stg_sig}",
-        lambda: write_partitioned(
-            fact_stock_daily(
-                stg,
-                loaded["dim_date"],
-                loaded["dim_exchange"],
-                loaded["dim_currency"],
-                loaded["dim_trading_status"],
-                loaded["dim_company"],
-            ),
-            f"{out_dir}/fact_stock_daily",
-            partition_by=("date_sk",),
-        ),
-    )
+    stage = f"fact_stock_daily@{stg_sig}"
+    if _pending(stage):
+        _retried(
+            lambda: write_partitioned(
+                fact_stock_daily(
+                    stg,
+                    loaded["dim_date"],
+                    loaded["dim_exchange"],
+                    loaded["dim_currency"],
+                    loaded["dim_trading_status"],
+                    loaded["dim_company"],
+                ),
+                f"{out_dir}/fact_stock_daily",
+                partition_by=("date_sk",),
+            )
+        )
+        _mark(stage)
     loaded["stg_stock"] = stg
     loaded["fact_stock_daily"] = spark.read.parquet(f"{out_dir}/fact_stock_daily")
     return loaded

@@ -88,6 +88,23 @@ def get_spark(
         # behavior: parquet timestamps read as TIMESTAMP (with local
         # timezone, session tz pinned to UTC above).
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+        # parquet timestamp[ns] columns (which Spark's TimestampType
+        # cannot hold) infer as raw int64 nanos instead of failing the
+        # read. Set here, once per session: flipping a session-global
+        # conf inside a read races with jobs on other threads.
+        # ``readers.read_table`` does not depend on it.
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # Whole-stage codegen cache, a static conf (builder only). The
+        # default of 100 entries is a 4-segment Guava LRU, ~25 per
+        # segment, and a repeated pass larger than that never hits: one
+        # daily stock-pipeline run generates ~89 distinct classes and
+        # an 8-query mix of the registry ~190-200, so at 100 every
+        # repeat recompiled all of them in Janino (and threw away their
+        # JIT work). At 1000 a repeat recompiles 0 (pipeline) and 0-12
+        # (query mix; AQE names codegen stages in the order its stages
+        # materialize, so a few classes vary) classes; 400 still left
+        # 2-8. Metaspace stayed at ~160 MB.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # split files finer than the 128 MB default: single-file tables
         # otherwise scan on one core; at cluster scale smaller splits
         # just mean more (cheap) tasks and better core utilization.

@@ -106,32 +106,42 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     nanos and truncated to microsecond timestamps. Truncation (not
     rounding) matches how columnar engines cast ns→us, so oracle
     comparisons stay exact. Footer-only schema probe — no data read.
+
+    The nanos are read through an explicit schema taken from the
+    footer, not through ``spark.sql.legacy.parquet.nanosAsLong``: the
+    read leaves ``spark.conf`` as it found it, and works the same on a
+    session that never set that conf.
     """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import from_arrow_schema
+
     path = os.path.join(sf_dir, f"{name}.parquet")
-    ns_cols = _nanos_timestamp_columns(path)
+    footer = _footer_schema(path)
+    ns_cols = [
+        f.name
+        for f in footer or ()
+        if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
+    ]
     if not ns_cols:
         return spark.read.parquet(path)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+    # the other timestamp columns keep the type the session would infer
+    ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled") == "true"
+    raw = pa.schema(
+        [f.with_type(pa.int64()) if f.name in ns_cols else f for f in footer]
+    )
+    df = spark.read.schema(from_arrow_schema(raw, prefer_timestamp_ntz=ntz)).parquet(path)
     for c in ns_cols:
         df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
     return df
 
 
-def _nanos_timestamp_columns(path: str) -> list[str]:
+def _footer_schema(path: str):
     try:
         import pyarrow.parquet as pq
 
-        schema = pq.read_schema(path)
+        return pq.read_schema(path)
     except Exception:
-        return []
-    import pyarrow as pa
-
-    return [
-        f.name
-        for f in schema
-        if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
-    ]
+        return None
 
 
 def tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -85,3 +85,77 @@ def test_bigint_sum_overflow_raises_under_ansi(spark):
     df = spark.range(3).selectExpr(f"CAST({big} AS BIGINT) AS v").selectExpr("SUM(v)")
     with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW|overflow"):
         df.collect()
+
+
+# perfbench's query_mix: one registry query per plans.* and operators.*
+# module
+QUERY_MIX = (
+    "q3_shipping_priority", "fact_assembly_star", "basket_association_rules",
+    "timeseries_gap_fill",
+    "ann_cosine_topk_brute", "dedup_minhash_lsh", "eval_source_contamination",
+    "search_bm25_topk",
+)
+
+
+def test_repeated_query_mix_reuses_generated_code(spark):
+    """A session that repeats its queries must not recompile them: the
+    codegen cache has to hold a whole pass of the mix (~200 generated
+    classes), which the 100-entry default does not.
+
+    AQE is off for the two rounds: it numbers whole-stage codegen
+    stages as its query stages materialize, so sibling stages finishing
+    in another order give differently named classes (0-12 recompiles
+    per repeat, varying run to run). Without AQE the count measures
+    cache misses alone."""
+    from lambda_lakehouse_spark.registry import load_all
+    from tests.conftest import SF_DIR
+
+    reg = load_all()
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def one_round():
+        n = compiles.getCount()
+        for name in QUERY_MIX:
+            reg[name].spark(spark, SF_DIR).write.format("noop").mode("overwrite").save()
+        return compiles.getCount() - n
+
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        first = one_round()
+        second = one_round()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert second <= max(5, 0.05 * first), (first, second)
+
+
+def test_read_table_reads_nanos_without_touching_conf(spark, tmp_path):
+    """read_table reads timestamp[ns] as microsecond TIMESTAMP (truncated)
+    and leaves spark.conf unchanged, on the factory session and on a
+    session that never enabled nanosAsLong (a plain driver session)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from lambda_lakehouse_spark.sources.readers import read_table
+
+    ns = [1_700_000_000_123_456_789, 1_700_000_001_000_000_999]
+    pq.write_table(
+        pa.table({
+            "id": pa.array([1, 2], pa.int64()),
+            "ts": pa.array(ns, pa.timestamp("ns")),
+            "ts_us": pa.array([v // 1000 for v in ns], pa.timestamp("us")),
+        }),
+        str(tmp_path / "t.parquet"),
+    )
+    plain = spark.newSession()
+    plain.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+    for s in (spark, plain):
+        conf = dict(s.conf.getAll)
+        df = read_table(s, str(tmp_path), "t")
+        assert df.schema["ts"].dataType == T.TimestampType()
+        got = df.select("id", F.unix_micros("ts").alias("us")).orderBy("id").collect()
+        assert [r.us for r in got] == [v // 1000 for v in ns]
+        assert dict(s.conf.getAll) == conf
+    assert spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"

@@ -330,3 +330,137 @@ def test_pipeline_resume_rebuilds_dims_for_new_batches(spark, pipeline_out, tmp_
     # fact converges to the clean full-run output
     clean_count = spark.read.parquet(f"{clean_out}/fact_stock_daily").count()
     assert t2["fact_stock_daily"].count() == clean_count
+
+
+def test_stg_is_one_write_and_duplicate_batch_keeps_last(
+    spark, pipeline_out, tmp_path, monkeypatch
+):
+    """Every staging batch of one call lands in ONE partitioned write;
+    a (country, batch_date) given twice keeps its last batch, as
+    successive overwrites of its partition would."""
+    from lambda_lakehouse_spark.plans import stock_pipeline as sp
+
+    _, _, batches = pipeline_out
+    targets = []
+    real_write = sp.write_partitioned
+
+    def counting_write(df, path, **kw):
+        targets.append(path.rsplit("/", 1)[-1])
+        return real_write(df, path, **kw)
+
+    monkeypatch.setattr(sp, "write_partitioned", counting_write)
+    # VN 2025-10-24 twice: first with the 2025-10-23 raw rows (VN stamps
+    # datadate from the batch), then with its own
+    d2_raw = next(raw for c, raw, d in batches if (c, d) == ("VN", "2025-10-23"))
+    tables = sp.run_pipeline(spark, [("VN", d2_raw, "2025-10-24"), *batches], str(tmp_path))
+    assert targets.count("stg_stock") == 1
+    stg = tables["stg_stock"]
+    assert stg.count() == 9
+    aaa = stg.where((F.col("symbol") == "AAA") & (F.col("datadate") == "2025-10-24"))
+    assert [r.current_price for r in aaa.collect()] == [13.1]
+
+
+def _failing_dim_exchange(real):
+    """dim_exchange whose plan builds but whose write fails."""
+
+    def dim_exchange(stg):
+        df = real(stg)
+        boom = F.raise_error(F.lit("boom: dim_exchange write")).cast("long")
+        return df.withColumn("exchange_sk", F.coalesce(boom, F.col("exchange_sk")))
+
+    return dim_exchange
+
+
+@pytest.fixture(scope="module")
+def failed_dim_run(spark, pipeline_out, tmp_path_factory):
+    """One run whose dim_exchange write fails (retries=0): the raised
+    error and the markers it left."""
+    import os
+
+    from lambda_lakehouse_spark.plans import stock_pipeline as sp
+
+    _, _, batches = pipeline_out
+    out = str(tmp_path_factory.mktemp("dim_fail"))
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(sp, "dim_exchange", _failing_dim_exchange(sp.dim_exchange))
+        with pytest.raises(Exception) as err:
+            sp.run_pipeline_resilient(spark, batches, out, retries=0)
+    markers = set(os.listdir(os.path.join(out, "_pipeline_state")))
+    return out, err.value, markers
+
+
+def test_failed_dim_does_not_stop_the_others(failed_dim_run):
+    """The five dims run concurrently: one failing write leaves the
+    other four landed with markers, marks neither itself nor the fact,
+    and its own error is the one raised."""
+    import os
+
+    out, err, markers = failed_dim_run
+    assert "boom: dim_exchange write" in str(err)
+    done = {m.split("@")[0] for m in markers if "@" in m}
+    assert done == {"dim_date", "dim_currency", "dim_trading_status", "dim_company"}
+    for name in done:
+        assert os.path.exists(os.path.join(out, name, "_SUCCESS"))
+    assert sum(m.startswith("stg_") for m in markers) == 5
+
+
+def test_resume_after_failed_dim_reruns_only_it_and_fact(
+    spark, pipeline_out, failed_dim_run, monkeypatch
+):
+    from lambda_lakehouse_spark.plans import stock_pipeline as sp
+
+    _, clean_out, batches = pipeline_out
+    out, _, _ = failed_dim_run
+    calls = []
+
+    def counting(name):
+        real = getattr(sp, name)
+
+        def fn(*a, **kw):
+            calls.append(name)
+            return real(*a, **kw)
+
+        return fn
+
+    for name in ("dim_date", "dim_exchange", "dim_currency", "dim_trading_status",
+                 "dim_company", "fact_stock_daily"):
+        monkeypatch.setattr(sp, name, counting(name))
+    for country in sp.STG_JOBS:
+        monkeypatch.setitem(sp.STG_JOBS, country, counting(sp.STG_JOBS[country].__name__))
+    tables = sp.run_pipeline_resilient(spark, batches, out, retries=0, resume=True)
+    assert calls == ["dim_exchange", "fact_stock_daily"]
+    clean = spark.read.parquet(f"{clean_out}/dim_exchange")
+    assert sorted(tables["dim_exchange"].collect()) == sorted(clean.collect())
+    clean_count = spark.read.parquet(f"{clean_out}/fact_stock_daily").count()
+    assert tables["fact_stock_daily"].count() == clean_count
+
+
+def test_pipeline_jobs_keep_the_callers_job_group(spark, pipeline_out, tmp_path):
+    """The dim writes run on worker threads; every job the pipeline
+    launches must still carry the caller's job group."""
+    sc = spark.sparkContext
+    _, _, batches = pipeline_out
+
+    def jobs_of(group):
+        # job events reach the status store through the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+        return set(sc.statusTracker().getJobIdsForGroup(group))
+
+    def probe(group):
+        sc.setJobGroup(group, group)
+        spark.range(1).collect()
+        return jobs_of(group)
+
+    group = "stock-pipeline-group-test"
+    try:
+        before = probe("stock-pipeline-probe-before")
+        sc.setJobGroup(group, "run_pipeline")
+        run_pipeline(spark, batches, str(tmp_path))
+        after = probe("stock-pipeline-probe-after")
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    launched = set(range(max(before) + 1, min(after)))
+    assert launched
+    assert launched == jobs_of(group)

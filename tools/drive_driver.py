@@ -6,9 +6,17 @@ import sys
 import duckdb
 from pyspark.sql import SparkSession
 
-spark = SparkSession.builder.master("local[8]").appName("driver-sim").getOrCreate()
+spark = (
+    SparkSession.builder.master(f"local[{len(os.sched_getaffinity(0))}]")
+    .appName("driver-sim")
+    # the floor-scaled oracle sums rely on ANSI overflow errors; pin the
+    # mode rather than inherit the Spark default
+    .config("spark.sql.ansi.enabled", "true")
+    .getOrCreate()
+)
 spark.sparkContext.setLogLevel("ERROR")
 print("session timezone conf:", spark.conf.get("spark.sql.session.timeZone"))
+print("ansi conf:", spark.conf.get("spark.sql.ansi.enabled"))
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as e  # noqa: E402

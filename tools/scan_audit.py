@@ -84,20 +84,20 @@ BASELINE: dict[str, int] = {
     "agg_approx_sketches": 3,  # [branches] sketch vs exact twin reads
     "agg_exact_percentiles": 3,  # [passes] rank model + assign + count
     "agg_percentile_cont_global": 3,  # [passes] two-pass global rank
-    "ann_cosine_topk_brute": 4,  # [branches] query/corpus sides + norms
+    "ann_cosine_topk_brute": 2,  # [branches] query side + corpus side
     "ann_cosine_topk_hyperlsh": 5,  # [passes] plane model + bucket + verify
     "ann_cosine_topk_ivf": 6,  # [passes] k-means train + assign + probe;
     #   blanket checkpoint A/B'd r9 and REJECTED (3.4 s -> 12.6 s)
     "ann_cosine_topk_ivf_pretrained": 6,  # [passes] same family
     "ann_cosine_topk_ivfpq": 6,  # [passes] same family + PQ residuals
     "bloom_semijoin_prune": 5,  # [branches] build + probe + truth compare
-    "eval_embedding_hubness": 5,  # [branches] cosine_topk's four
-    #   (query side, corpus side, corpus norms, query norms — same
-    #   as ann_cosine_topk_brute's dispositioned 4) + the vec_id-only
+    "eval_embedding_hubness": 3,  # [branches] cosine_topk's query and
+    #   corpus sides (as ann_cosine_topk_brute) + the vec_id-only
     #   column-pruned scan for the zero-occurrence (antihub) fill
-    "mine_bitext_margin": 3,  # [fixed r9 at birth] 16 -> 3 via fwd-top1
-    #   + narrow norms checkpoints (3.11 -> 1.77 s sf0.1); residual 3 =
-    #   pruned query side + one candidate scan per mining direction
+    "mine_bitext_margin": 4,  # [branches] the backward pass: its query
+    #   and corpus sides, each with a vec_id-only scan under its
+    #   matched-id broadcast; the forward pass runs under its lazy
+    #   checkpoint (3 checkpoint reads, scans not visible here)
     "cdc_table_diff": 3,  # [branches] old/new snapshots + diff
     "corpus_cross_source_overlap": 4,  # [branches] per-side gram sets
     "corpus_source_unigram_cosine": 4,  # [reprint] A/B'd r9: histogram
@@ -110,7 +110,7 @@ BASELINE: dict[str, int] = {
     #   one bounded pass per corpus-prefix point by definition
     "corpus_tfidf_topterms": 3,  # [passes] DF model + score
     "corpus_token_spectrum": 3,  # [passes] spectrum model + Good-Turing
-    "dedup_embedding_cosine": 4,  # [branches] pair sides + norms
+    "dedup_embedding_cosine": 2,  # [branches] the two pair sides
     "dedup_incremental_batch": 3,  # [passes] one read per arrival batch
     "dedup_jaccard_prefix_filter": 0,  # [retired r12] alias registration
     #   removed (one registry entry per distinct plan); the plan lives
