@@ -63,10 +63,14 @@ def pagerank_fixed(edges: DataFrame, n_iter: int = N_ITER) -> DataFrame:
     relation — the same lineage-truncation pattern
     ``operators/dedup.doc_clusters`` uses for its min-label rounds.
     ``eager=False`` (like every other call site, e.g.
-    ``operators/ranking.py``'s chained passes) so merely *constructing*
-    the query runs no job: plan-only consumers — the guardrail sweeps
-    in tests/test_scale.py build every registered query — stay lazy,
-    and the checkpoint materializes on first action as usual.
+    ``operators/ranking.py``'s chained passes) defers the checkpoint's
+    own write to the first action. It does not make *constructing* the
+    query job-free: with AQE on, building the checkpoint plans its
+    child adaptively, which runs the child's shuffle map stages (here
+    the ``src`` window exchange and any shuffle that derives ``edges``)
+    at once. So plan-only consumers — the guardrail sweeps in
+    tests/test_scale.py build every registered query — run those
+    stages too.
 
     outdeg rides a per-src window COUNT (round 13): the old
     ``edges.groupBy(src).count()`` + ``edges.join(deg, "src")``

@@ -87,10 +87,11 @@ def bm25_topk(
     # "plan economy" intent was ReuseExchange serving them from one
     # shuffle, but column pruning keeps the subtrees physically
     # distinct and reuse never fires: the round-12 before-plan scanned
-    # the corpus 12 times for one BM25 run. The lazy checkpoint is the
+    # the corpus 12 times for one BM25 run. The checkpoint is the
     # honest materialization of the index build — the exact artifact a
     # search engine persists — so the tokenize + tf aggregate runs
-    # once.
+    # once. eager=False defers only its write: under AQE, building it
+    # already runs the tokenize + tf shuffle (see graph.pagerank_fixed).
     tf = (
         words.groupBy("doc_id", "word")
         .agg(F.count(F.lit(1)).alias("tf"))

@@ -1373,8 +1373,11 @@ def source_contamination(docs: DataFrame) -> DataFrame:
     and both size joins — measured: zero exchange reuse even under
     AQE); this shape pays the expensive per-position md5 exactly once.
 
-    The posting relation is localCheckpoint-ed (lazy, the pagerank /
-    doc_clusters lineage-truncation pattern): it feeds three consumers
+    The posting relation is localCheckpoint-ed (the pagerank /
+    doc_clusters lineage-truncation pattern; ``eager=False`` defers only
+    the checkpoint's write, since under AQE building it already runs
+    the gram explode and the gh shuffle — see
+    ``graph.pagerank_fixed``): it feeds three consumers
     (pair counts + both size joins) and exchange reuse cannot dedupe
     them — collect_set is a nondeterministic expression, so the three
     identical gh-keyed exchanges never canonicalize equal (verified on

@@ -8,8 +8,9 @@ the DAG fan-in (``airflow/dags/lakehouse_dags.py:100-170``:
 stg per country → 5 dims in parallel → fact last). All staging
 batches of one call land in one partitioned write; the five dim
 writes run as concurrent Spark jobs from one thread each; the fact
-runs once every dim has landed (``run_pipeline_resilient`` gives the
-failure order and the marker rule).
+runs once every dim has landed. Each table is read back with the
+schema it was written with, never inferred (``run_pipeline_resilient``
+gives the failure order, the marker rule and the read-back schemas).
 
 Scale posture: stg is a narrow projection (no shuffle); each dim is
 one distinct/groupBy shuffle over the stg subset of its columns; the
@@ -24,6 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from lambda_lakehouse_spark.functions.scalar import (
     as_double_clean,
@@ -492,7 +494,14 @@ def run_pipeline_resilient(
       finished, the first failure in DAG order (date, exchange,
       currency, trading status, company) is raised; the dims that
       landed keep their markers.
-    - fact: runs only when all five dims have landed.
+    - fact: runs only when all five dims have landed. Like a dim's,
+      its plan is built once, outside the retry loop.
+
+    Every table is read back with an explicit schema, so the returned
+    frames (and the dims the fact joins) cost no schema-inference job:
+    stg with the contract (which types its partition columns too), each
+    dim and the fact with its plan's schema, which its marker records
+    for later calls that skip it. A fully resumed call launches no job.
 
     Every stage write is idempotent (dynamic partition overwrite /
     static dim overwrite), so retry-after-partial-write is safe: the
@@ -516,6 +525,7 @@ def run_pipeline_resilient(
     - only markers that existed BEFORE this invocation cause skips.
     """
     import hashlib
+    import json
     import os
     import time
     from concurrent.futures import ThreadPoolExecutor
@@ -543,9 +553,21 @@ def run_pipeline_resilient(
                 if retry_delay_s:
                     time.sleep(retry_delay_s)
 
-    def _mark(stage: str) -> None:
+    def _mark(stage: str, schema: T.StructType | None = None) -> None:
         with open(os.path.join(state_dir, f"{stage}.done"), "w") as f:
-            f.write("done\n")
+            f.write("done\n" if schema is None else schema.json())
+
+    def _read_back(name: str, stage: str) -> DataFrame:
+        # with the schema the stage's marker recorded; a marker without
+        # one (written before markers carried schemas) leaves it to
+        # inference, which runs a job per read
+        path = f"{out_dir}/{name}"
+        with open(os.path.join(state_dir, f"{stage}.done")) as f:
+            try:
+                schema = T.StructType.fromJson(json.load(f))
+            except ValueError:
+                return spark.read.parquet(path)
+        return spark.read.schema(schema).parquet(path)
 
     # last batch wins per (country, batch_date); dict keeps first-seen order
     stg_batches = {
@@ -574,10 +596,12 @@ def run_pipeline_resilient(
         ).encode()
     ).hexdigest()[:12]
 
-    # partitioned reads append partition cols last; restore the contract
-    # order and exact types (partition inference can widen types)
+    # the contract types the partition columns too; partitioned reads
+    # append them last, so restore the contract order
     stg = align_to_contract(
-        spark.read.parquet(f"{out_dir}/stg_stock"), STG_CONTRACT
+        spark.read.schema(", ".join(f"`{c}` {t}" for c, t in STG_CONTRACT))
+        .parquet(f"{out_dir}/stg_stock"),
+        STG_CONTRACT,
     )
 
     dim_builders = {
@@ -598,7 +622,7 @@ def run_pipeline_resilient(
 
     def _write_dim(name: str) -> None:
         _retried(lambda: built[name].write.mode("overwrite").parquet(f"{out_dir}/{name}"))
-        _mark(f"{name}@{stg_sig}")
+        _mark(f"{name}@{stg_sig}", built[name].schema)
 
     if built:
         inherit = inheritable_thread_target(spark)
@@ -610,25 +634,24 @@ def run_pipeline_resilient(
     for name in dim_builders:
         if name in errors:
             raise errors[name]
-    loaded = {n: spark.read.parquet(f"{out_dir}/{n}") for n in dim_builders}
+    loaded = {n: _read_back(n, f"{n}@{stg_sig}") for n in dim_builders}
 
     stage = f"fact_stock_daily@{stg_sig}"
     if _pending(stage):
+        fact = fact_stock_daily(
+            stg,
+            loaded["dim_date"],
+            loaded["dim_exchange"],
+            loaded["dim_currency"],
+            loaded["dim_trading_status"],
+            loaded["dim_company"],
+        )
         _retried(
             lambda: write_partitioned(
-                fact_stock_daily(
-                    stg,
-                    loaded["dim_date"],
-                    loaded["dim_exchange"],
-                    loaded["dim_currency"],
-                    loaded["dim_trading_status"],
-                    loaded["dim_company"],
-                ),
-                f"{out_dir}/fact_stock_daily",
-                partition_by=("date_sk",),
+                fact, f"{out_dir}/fact_stock_daily", partition_by=("date_sk",)
             )
         )
-        _mark(stage)
+        _mark(stage, fact.schema)
     loaded["stg_stock"] = stg
-    loaded["fact_stock_daily"] = spark.read.parquet(f"{out_dir}/fact_stock_daily")
+    loaded["fact_stock_daily"] = _read_back("fact_stock_daily", stage)
     return loaded

@@ -5,9 +5,11 @@ Covers SURVEY §2.1:
   (``utils/init_spark.py:22-36``): header, multiLine, quote/escape
   ``"``, UTF-8, PERMISSIVE. Unlike the reference we prefer an explicit
   schema (no ``inferSchema`` extra pass over 100 TB of input).
-- S2/S3 table scans: plain ``spark.read.parquet`` over the lakehouse
-  layout; ``tables()`` registers the standard test tables as temp
-  views so ``spark.sql`` works identically to the reference's
+- S2/S3 table scans: ``read_table`` takes each table's schema from
+  its parquet footer (no schema-inference job, as the reference's
+  catalog tables carry theirs in metadata); ``tables()`` registers
+  the standard test tables as temp views so ``spark.sql`` works
+  identically to the reference's
   ``spark.sql("select * from nessie.stg.stg_stock")``.
 - S4 local-collection source: just ``spark.createDataFrame`` — used by
   the currency lookup seed (see plans/star.py).
@@ -101,47 +103,61 @@ def read_csv_raw(
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one lakehouse table (S2/S3) from a scale-factor directory.
 
+    The schema comes from the file's parquet footer (read with pyarrow
+    on the driver), so building the scan launches no Spark job: a
+    schema-less ``spark.read.parquet`` runs one job per read only to
+    read that same footer. Timestamps without a zone follow the
+    session's ``inferTimestampNTZ`` preference, as inference would.
+
     Parquet ``timestamp[ns]`` columns (which Spark's reader rejects —
     TimestampType is microsecond-precision) are read as raw int64
     nanos and truncated to microsecond timestamps. Truncation (not
     rounding) matches how columnar engines cast ns→us, so oracle
-    comparisons stay exact. Footer-only schema probe — no data read.
+    comparisons stay exact. The read leaves ``spark.conf`` as it found
+    it (no ``spark.sql.legacy.parquet.nanosAsLong``), and works the
+    same on a session that never set that conf.
 
-    The nanos are read through an explicit schema taken from the
-    footer, not through ``spark.sql.legacy.parquet.nanosAsLong``: the
-    read leaves ``spark.conf`` as it found it, and works the same on a
-    session that never set that conf.
+    Spark infers the schema only when the footer cannot be read (a
+    directory, a missing file) or a column has no Spark mapping in
+    ``from_arrow_schema`` (unsigned integers, half floats).
     """
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import from_arrow_schema
-
     path = os.path.join(sf_dir, f"{name}.parquet")
-    footer = _footer_schema(path)
-    ns_cols = [
-        f.name
-        for f in footer or ()
-        if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
-    ]
-    if not ns_cols:
+    schema, ns_cols = _footer_schema(spark, path)
+    if schema is None:
         return spark.read.parquet(path)
-    # the other timestamp columns keep the type the session would infer
-    ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled") == "true"
-    raw = pa.schema(
-        [f.with_type(pa.int64()) if f.name in ns_cols else f for f in footer]
-    )
-    df = spark.read.schema(from_arrow_schema(raw, prefer_timestamp_ntz=ntz)).parquet(path)
+    df = spark.read.schema(schema).parquet(path)
     for c in ns_cols:
         df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
     return df
 
 
-def _footer_schema(path: str):
-    try:
-        import pyarrow.parquet as pq
+def _footer_schema(
+    spark: SparkSession, path: str
+) -> tuple[T.StructType | None, list[str]]:
+    """The Spark schema of the parquet file at ``path`` with its
+    ``timestamp[ns]`` columns typed int64, and those columns' names;
+    ``(None, [])`` when the footer gives no schema Spark can read."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
 
-        return pq.read_schema(path)
-    except Exception:
-        return None
+    try:
+        footer = pq.read_schema(path)
+    except (OSError, pa.ArrowException):
+        return None, []
+    ns_cols = [
+        f.name
+        for f in footer
+        if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
+    ]
+    raw = pa.schema(
+        [f.with_type(pa.int64()) if f.name in ns_cols else f for f in footer]
+    )
+    ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled") == "true"
+    try:
+        return from_arrow_schema(raw, prefer_timestamp_ntz=ntz), ns_cols
+    except TypeError:
+        return None, []
 
 
 def tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

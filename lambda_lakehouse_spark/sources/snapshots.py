@@ -898,6 +898,7 @@ class SnapshotTable:
 # ---------------------------------------------------------------------------
 
 from lambda_lakehouse_spark.registry import register  # noqa: E402
+from lambda_lakehouse_spark.sources.readers import read_table  # noqa: E402
 
 
 @register(
@@ -928,7 +929,7 @@ def snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"llh_snapshot_demo_{os.path.basename(sf_dir.rstrip('/'))}",
     )
     shutil.rmtree(base, ignore_errors=True)
-    nation = spark.read.parquet(os.path.join(sf_dir, "nation.parquet"))
+    nation = read_table(spark, sf_dir, "nation")
     t = SnapshotTable(spark, base, partition_by=["n_regionkey"])
     t.create(nation)
     t.overwrite_partitions(
@@ -964,7 +965,7 @@ def snapshot_incremental_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"llh_snapshot_inc_{os.path.basename(sf_dir.rstrip('/'))}",
     )
     shutil.rmtree(base, ignore_errors=True)
-    nation = spark.read.parquet(os.path.join(sf_dir, "nation.parquet"))
+    nation = read_table(spark, sf_dir, "nation")
     t = SnapshotTable(spark, base, partition_by=["n_regionkey"])
     t.create(nation.where("n_regionkey < 2"))
     t.append(nation.where("n_regionkey >= 2"))
@@ -1005,7 +1006,7 @@ def snapshot_merge_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"llh_snapshot_merge_{os.path.basename(sf_dir.rstrip('/'))}",
     )
     shutil.rmtree(base, ignore_errors=True)
-    nation = spark.read.parquet(os.path.join(sf_dir, "nation.parquet"))
+    nation = read_table(spark, sf_dir, "nation")
     t = SnapshotTable(spark, base, partition_by=["n_regionkey"])
     t.create(nation)
     r2 = nation.where("n_regionkey = 2")
@@ -1045,7 +1046,7 @@ def snapshot_delete_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"llh_snapshot_delrb_{os.path.basename(sf_dir.rstrip('/'))}",
     )
     shutil.rmtree(base, ignore_errors=True)
-    cust = spark.read.parquet(os.path.join(sf_dir, "customer.parquet")).select(
+    cust = read_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal"
     )
     t = SnapshotTable(spark, base, partition_by=["c_mktsegment"])
@@ -1099,7 +1100,7 @@ def snapshot_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"llh_snapshot_evo_{os.path.basename(sf_dir.rstrip('/'))}",
     )
     shutil.rmtree(base, ignore_errors=True)
-    nation = spark.read.parquet(os.path.join(sf_dir, "nation.parquet")).select(
+    nation = read_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     )
     t = SnapshotTable(spark, base, partition_by=["n_regionkey"])
@@ -1141,7 +1142,7 @@ def snapshot_branch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"llh_snapshot_branch_{os.path.basename(sf_dir.rstrip('/'))}",
     )
     shutil.rmtree(base, ignore_errors=True)
-    nation = spark.read.parquet(os.path.join(sf_dir, "nation.parquet")).select(
+    nation = read_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     )
     t = SnapshotTable(spark, base, partition_by=["n_regionkey"])
@@ -1220,7 +1221,7 @@ def snapshot_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"llh_snapshot_wap_{os.path.basename(sf_dir.rstrip('/'))}",
     )
     shutil.rmtree(base, ignore_errors=True)
-    cust = spark.read.parquet(os.path.join(sf_dir, "customer.parquet")).select(
+    cust = read_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal"
     )
     t = SnapshotTable(spark, base, partition_by=["c_mktsegment"])
@@ -1265,7 +1266,7 @@ def snapshot_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"llh_snapshot_pevo_{os.path.basename(sf_dir.rstrip('/'))}",
     )
     shutil.rmtree(base, ignore_errors=True)
-    nation = spark.read.parquet(os.path.join(sf_dir, "nation.parquet")).select(
+    nation = read_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     )
     t = SnapshotTable(spark, base)  # unpartitioned v1

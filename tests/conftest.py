@@ -48,7 +48,8 @@ def built_queries(spark):
     the all-registry plan-guardrail sweeps (pathological joins,
     unpartitioned windows, unique output columns). Construction pays
     Catalyst analysis — and, for the trained-quantizer queries, the
-    training jobs an eager checkpoint runs at build time — so paying
+    training jobs an eager checkpoint runs at build time; with AQE on,
+    even a lazy checkpoint runs its child's shuffle stages — so paying
     it once per suite instead of once per sweep cut the three sweeps
     from 135/120/114 s to one shared build (round-13 suite-runtime
     fix; the driver's verify window was truncating the suite). The
@@ -68,6 +69,25 @@ def ducks():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     yield con
     con.close()
+
+
+def jobs_launched_by(spark, fn):
+    """Run ``fn()`` under a job group of its own; return its result and
+    the number of Spark jobs it launched."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-launched-by-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    # job events reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _canon_cell(v):

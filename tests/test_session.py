@@ -159,3 +159,42 @@ def test_read_table_reads_nanos_without_touching_conf(spark, tmp_path):
         assert [r.us for r in got] == [v // 1000 for v in ns]
         assert dict(s.conf.getAll) == conf
     assert spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
+
+
+def test_read_table_uses_footer_schema_without_a_job(spark, tmp_path):
+    """read_table builds its scan with the footer's schema: it is the
+    schema Spark's inference gives, and building the scan launches no
+    job. Files the footer cannot type still read as inference reads
+    them: an unsigned column, and a Spark-written directory."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    from lambda_lakehouse_spark.sources.readers import _footer_schema, read_table
+    from tests.conftest import SF_DIR, TESTDATA_TABLES, jobs_launched_by
+
+    for name in TESTDATA_TABLES:
+        path = os.path.join(SF_DIR, f"{name}.parquet")
+        inferred = spark.read.parquet(path).schema
+        # the scan before the ns → timestamp rewrite (this session reads
+        # timestamp[ns] as int64, as the footer schema types it)
+        footer, ns_cols = _footer_schema(spark, path)
+        assert spark.read.schema(footer).parquet(path).schema == inferred, name
+        df, jobs = jobs_launched_by(spark, lambda: read_table(spark, SF_DIR, name))
+        assert jobs == 0, name
+        if not ns_cols:
+            assert df.schema == inferred, name
+
+    pq.write_table(
+        pa.table({"u": pa.array([1, 4_000_000_000], pa.uint32())}),
+        str(tmp_path / "u.parquet"),
+    )
+    assert _footer_schema(spark, str(tmp_path / "u.parquet")) == (None, [])
+    u = read_table(spark, str(tmp_path), "u")
+    assert u.schema["u"].dataType == T.LongType()
+    assert sorted(r.u for r in u.collect()) == [1, 4_000_000_000]
+
+    spark.range(3).write.parquet(str(tmp_path / "d.parquet"))
+    d = read_table(spark, str(tmp_path), "d")
+    assert d.schema == spark.read.parquet(str(tmp_path / "d.parquet")).schema
+    assert d.count() == 3

@@ -464,3 +464,32 @@ def test_pipeline_jobs_keep_the_callers_job_group(spark, pipeline_out, tmp_path)
     launched = set(range(max(before) + 1, min(after)))
     assert launched
     assert launched == jobs_of(group)
+
+
+def test_fully_resumed_pipeline_launches_no_job(spark, pipeline_out, tmp_path):
+    """A call that skips every stage reads the store back with the
+    schemas the stages were written with, so it launches no job, and
+    each table keeps the schema inference gives (partition columns
+    last), stg in contract order."""
+    from lambda_lakehouse_spark.operators.align import align_to_contract
+    from lambda_lakehouse_spark.plans import stock_pipeline as sp
+    from tests.conftest import jobs_launched_by
+
+    _, _, batches = pipeline_out
+    out = str(tmp_path)
+    first = sp.run_pipeline_resilient(spark, batches, out, retries=0)
+    fact_rows = first["fact_stock_daily"].count()
+    tables, jobs = jobs_launched_by(
+        spark, lambda: sp.run_pipeline_resilient(spark, batches, out, retries=0)
+    )
+    assert jobs == 0
+    assert tables.keys() == first.keys() and len(tables) == 7
+    for name in tables:
+        inferred = spark.read.parquet(f"{out}/{name}")
+        if name == "stg_stock":
+            assert inferred.columns[-2:] == ["country", "datadate"]
+            inferred = align_to_contract(inferred, STG_CONTRACT)
+        assert first[name].schema == inferred.schema, name
+        assert tables[name].schema == inferred.schema, name
+    assert tables["fact_stock_daily"].columns[-1] == "date_sk"
+    assert tables["fact_stock_daily"].count() == fact_rows
