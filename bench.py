@@ -161,7 +161,6 @@ BAND_MAX: dict[str, float] = {
     "ann_cosine_topk_ivf": 6.0,  # r13 floor 2.35 (train-inclusive; JIT dispersion to ~4.4 in A/B rounds)
     "ann_cosine_topk_ivf_pretrained": 3.0,  # r13 floor 0.99
     "ann_cosine_topk_ivfpq": 11.0,  # r13 floor 5.21 (train-inclusive)
-    "ann_cosine_topk_rowlocal": 2.0,  # r13 floor 0.62
     "basket_association_rules": 3.5,  # r13 floor 1.57
     "corpus_token_spectrum": 1.5,  # r13 floor 0.54
     "corpus_top_ngrams": 2.0,  # r13 floor 0.69

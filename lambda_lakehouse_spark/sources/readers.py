@@ -136,23 +136,35 @@ def _footer_schema(
 ) -> tuple[T.StructType | None, list[str]]:
     """The Spark schema of the parquet file at ``path`` with its
     ``timestamp[ns]`` columns typed int64, and those columns' names;
-    ``(None, [])`` when the footer gives no schema Spark can read."""
+    ``(None, [])`` when the footer gives no schema Spark can read.
+
+    pyarrow also reports INT96 columns (the deprecated nanosecond
+    timestamp encoding) as ``timestamp[ns]``; the physical types from
+    the same footer tell them apart. Spark reads INT96 as TimestampType
+    itself, so those keep a timestamp type (zone-aware, which maps to
+    TimestampType whatever the NTZ preference, as inference does)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import from_arrow_schema
 
     try:
-        footer = pq.read_schema(path)
+        with pq.ParquetFile(path) as pf:
+            footer = pf.schema_arrow
+            int96 = {c.path for c in pf.schema if c.physical_type == "INT96"}
     except (OSError, pa.ArrowException):
         return None, []
     ns_cols = [
         f.name
         for f in footer
         if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
+        and f.name not in int96
     ]
-    raw = pa.schema(
-        [f.with_type(pa.int64()) if f.name in ns_cols else f for f in footer]
-    )
+    raw = pa.schema([
+        f.with_type(pa.timestamp("us", tz="UTC")) if f.name in int96
+        else f.with_type(pa.int64()) if f.name in ns_cols
+        else f
+        for f in footer
+    ])
     ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled") == "true"
     try:
         return from_arrow_schema(raw, prefer_timestamp_ntz=ntz), ns_cols

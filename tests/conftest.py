@@ -1,6 +1,9 @@
-"""Shared test fixtures: one SparkSession per test run + the
+"""Shared test fixtures: one SparkSession per test run, the
 DuckDB-oracle comparator that mirrors the driver's correctness gate
-(row-count + column-name-sorted, order-insensitive value comparison).
+(row-count + column-name-sorted, order-insensitive value comparison),
+and ``oracle_runs``, the one pass that builds and runs every registered
+query: it feeds both the oracle gate and the plan guardrails, which
+read the static and executed plans it recorded (``plan_nodes``).
 
 Native-typed rows (Spark ``collect()``, DuckDB ``fetchall()``) are
 compared for value exactness (date/timestamp/decimal coercions can't
@@ -24,6 +27,11 @@ import datetime as dt
 import gc
 import math
 import os
+import re
+import uuid
+from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
+from dataclasses import dataclass, field
 
 import duckdb
 import pytest
@@ -43,24 +51,6 @@ def spark():
 
 
 @pytest.fixture(scope="session")
-def built_queries(spark):
-    """One built DataFrame per registered query, shared by
-    the all-registry plan-guardrail sweeps (pathological joins,
-    unpartitioned windows, unique output columns). Construction pays
-    Catalyst analysis — and, for the trained-quantizer queries, the
-    training jobs an eager checkpoint runs at build time; with AQE on,
-    even a lazy checkpoint runs its child's shuffle stages — so paying
-    it once per suite instead of once per sweep cut the three sweeps
-    from 135/120/114 s to one shared build (round-13 suite-runtime
-    fix; the driver's verify window was truncating the suite). The
-    forced-broadcast guardrail deliberately does NOT use this cache:
-    it must plan under its own session confs."""
-    from lambda_lakehouse_spark.registry import load_all
-
-    return {name: q.spark(spark, SF_DIR) for name, q in sorted(load_all().items())}
-
-
-@pytest.fixture(scope="session")
 def ducks():
     con = duckdb.connect()
     for t in TESTDATA_TABLES:
@@ -71,20 +61,26 @@ def ducks():
     con.close()
 
 
-def jobs_launched_by(spark, fn):
-    """Run ``fn()`` under a job group of its own; return its result and
-    the number of Spark jobs it launched."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"jobs-launched-by-{uuid.uuid4().hex}"
+@contextmanager
+def job_group(sc, group: str):
+    """Tag every Spark job and SQL execution this thread starts inside
+    the block with ``group`` (as job group and as description)."""
     sc.setJobGroup(group, group)
     try:
-        out = fn()
+        yield
     finally:
         for key in ("spark.jobGroup.id", "spark.job.description",
                     "spark.job.interruptOnCancel"):
             sc.setLocalProperty(key, None)
+
+
+def jobs_launched_by(spark, fn):
+    """Run ``fn()`` under a job group of its own; return its result and
+    the number of Spark jobs it launched."""
+    sc = spark.sparkContext
+    group = f"jobs-launched-by-{uuid.uuid4().hex}"
+    with job_group(sc, group):
+        out = fn()
     # job events reach the status store through the listener bus
     sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
@@ -151,12 +147,12 @@ def assert_pandas_dtype_kinds_match(sdf, oracle_pdf, name: str):
             )
 
 
-def assert_query_matches_oracle(spark, ducks, query, sf_dir: str = SF_DIR):
-    """Run the Spark query and its DuckDB oracle; assert identical
-    column sets, identical sorted canonical rows, and driver-compatible
-    pandas dtype kinds (see module docstring)."""
-    sdf = query.spark(spark, sf_dir)
-    s_cols, s_rows = canonical_rows(sdf.columns, [tuple(r) for r in sdf.collect()])
+def assert_matches_oracle(ducks, query, sdf, rows):
+    """Compare a collected Spark result (``sdf`` and its ``rows``) with
+    the query's DuckDB oracle: identical column sets, identical sorted
+    canonical rows, and driver-compatible pandas dtype kinds (see module
+    docstring)."""
+    s_cols, s_rows = canonical_rows(sdf.columns, rows)
 
     # Execute the (possibly expensive) oracle ONCE into a temp table —
     # column types (incl. HUGEINT) are preserved — then take the two
@@ -187,11 +183,189 @@ def assert_query_matches_oracle(spark, ducks, query, sf_dir: str = SF_DIR):
         raise AssertionError(
             f"{query.name}: value mismatch; first diffs (spark vs oracle): {diffs}"
         )
-    # Release this query's DataFrame graph promptly: py4j objects form
-    # reference cycles, so without an explicit pass each compared
-    # query's plan — and its localCheckpoint blocks, JVM-side — lives
-    # until a generational GC runs; across 250 oracle compares in one
-    # session the accumulated blocks slow later queries (the round-11
-    # bench/rank-sweep finding, applied to the suite).
-    del sdf
-    gc.collect()
+
+
+@dataclass
+class QueryRun:
+    """What one recorded query run built and ran.
+
+    ``columns`` and ``static_plan`` (the formatted explain) come from the
+    built DataFrame before its action. ``executed_plans`` holds the
+    formatted plan of every SQL execution the run launched, as the SQL
+    status store recorded it: the action's, and those a query runs while
+    it is built — an eager checkpoint, a driver-side ``collect``, and,
+    under AQE, the child of a lazy ``localCheckpoint``, whose subtree the
+    static plan only shows as ``Scan ExistingRDD``. ``spark_error`` is
+    set when the build, the action or the plan read raised, so the plans
+    are incomplete; ``error`` is the run's outcome, the oracle compare's
+    included."""
+
+    columns: list[str] | None = None
+    static_plan: str | None = None
+    executed_plans: list[str] = field(default_factory=list)
+    spark_error: Exception | None = None
+    error: Exception | None = None
+
+    def plans(self) -> list[tuple[str, str]]:
+        """[(view, formatted plan)]: the static plan, then each executed one."""
+        static = [("static", self.static_plan)] if self.static_plan else []
+        return static + [("executed", p) for p in self.executed_plans]
+
+
+def _newest_execution_id(store) -> int:
+    """Id of the newest SQL execution in the status store, -1 if none.
+    Executions are kept in id order."""
+    while True:
+        n = store.executionsCount()
+        if n == 0:
+            return -1
+        newest = store.executionsList(n - 1, 1)
+        if newest.size():  # else the store evicted old ones meanwhile
+            return newest.apply(0).executionId()
+
+
+def _executed_plans(sc, store, group: str, after: int) -> list[str]:
+    """Formatted plans of the SQL executions described as ``group`` with
+    an id above ``after``. Only ids started since then are read, not the
+    whole store."""
+    # execution events reach the store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    plans = []
+    for eid in range(after + 1, _newest_execution_id(store) + 1):
+        e = store.execution(eid)
+        if not e.isDefined():
+            continue
+        e = e.get()
+        if e.description() == group:
+            plans.append(e.physicalPlanDescription())
+    return plans
+
+
+def run_recorded(spark, build, check=None) -> QueryRun:
+    """Build ``build()``, record its columns and static plan, collect
+    it, then ``check(sdf, rows)`` it, all under a job group of its own;
+    record the executed plan of every SQL execution that launched.
+    Nothing raises: the outcome is in the returned run."""
+    sc = spark.sparkContext
+    store = spark._jsparkSession.sharedState().statusStore()
+    formatted = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+        "formatted"
+    )
+    run = QueryRun()
+    group = f"run-recorded-{uuid.uuid4().hex}"
+    after = _newest_execution_id(store)
+    with job_group(sc, group):
+        try:
+            sdf = build()
+            run.columns = sdf.columns
+            run.static_plan = sdf._jdf.queryExecution().explainString(formatted)
+            rows = [tuple(r) for r in sdf.collect()]
+        except Exception as e:
+            run.spark_error = run.error = e
+        else:
+            try:
+                if check is not None:
+                    check(sdf, rows)
+            except Exception as e:
+                run.error = e
+    try:
+        run.executed_plans = _executed_plans(sc, store, group, after)
+    except Exception as e:
+        run.spark_error = run.spark_error or e
+    return run
+
+
+ORACLE_POOL_SIZE = 6
+
+
+@pytest.fixture(scope="session")
+def oracle_runs(spark):
+    """{query name: QueryRun} for every registered query: each query
+    built, run and compared with its DuckDB oracle (if it has one) once
+    per session, ORACLE_POOL_SIZE runs in flight.
+
+    The correctness gate (``test_oracle_queries.py``) re-raises each
+    outcome in its query's own test. The registry-wide plan guardrails
+    (``test_scale.py``, ``test_registry_contract.py``) read the columns
+    and plans the same runs recorded, so no query is built twice.
+
+    The compares are independent, and at sf0.001 each is mostly Spark
+    scheduling latency and a DuckDB execution, so the pool overlaps
+    them. Each compare gets its own DuckDB connection (connections are
+    not thread-safe; parquet views are cheap to register) and its own
+    job group, which the SQL executions it launches carry as their
+    description."""
+    from lambda_lakehouse_spark.registry import load_all
+
+    def one(q):
+        con = duckdb.connect()
+        try:
+            for t in TESTDATA_TABLES:
+                p = os.path.join(SF_DIR, f"{t}.parquet")
+                if os.path.exists(p):
+                    con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+
+            def check(sdf, rows):
+                assert_matches_oracle(con, q, sdf, rows)
+
+            return q.name, run_recorded(
+                spark,
+                lambda: q.spark(spark, SF_DIR),
+                check if q.oracle is not None else None,
+            )
+        finally:
+            con.close()
+            # Release this query's DataFrame graph promptly: py4j objects
+            # form reference cycles, so without an explicit pass each
+            # compared query's plan — and its localCheckpoint blocks,
+            # JVM-side — lives until a generational GC runs, and the
+            # accumulated blocks slow later queries.
+            gc.collect()
+
+    with ThreadPoolExecutor(max_workers=ORACLE_POOL_SIZE) as pool:
+        return dict(pool.map(one, load_all().values()))
+
+
+# A formatted explain prints each plan tree as one line per operator,
+# ``<indent><+- or :- ><"* " if codegen><label> (<operator id>)``, with
+# a trailing ``, Statistics(...)`` on AQE query stages; then one
+# ``(<id>) <operator>`` block per operator, holding its ``Arguments:``.
+_TREE_LINE = re.compile(r"^(?P<indent>[ :+\-]*)(?:\* )?(?P<label>.+?) \((?P<id>\d+)\)(?:, .*)?$")
+_DETAIL_HEAD = re.compile(r"^\((?P<id>\d+)\) ")
+
+
+@dataclass(frozen=True)
+class PlanNode:
+    name: str  # operator name: "Window", "BroadcastNestedLoopJoin", ...
+    args: str  # the operator's "Arguments:" text, "" if it has none
+    below: frozenset[str]  # names of the operators in its subtree
+
+
+def plan_nodes(formatted: str) -> list[PlanNode]:
+    """Every operator of a formatted explain, the form both
+    ``explainString("formatted")`` and an SQL execution's
+    ``physicalPlanDescription`` take: the main tree (under AQE, its
+    current and initial plans) and each subquery's tree."""
+    tree, args, in_tree, op = [], {}, False, None
+    for line in formatted.splitlines():
+        if line.startswith(("== Physical Plan ==", "Subquery:")):
+            in_tree = True  # a tree follows, up to the next blank line
+        elif not line.strip():
+            in_tree, op = False, None
+        elif in_tree:
+            m = _TREE_LINE.match(line)
+            if m:
+                tree.append((len(m["indent"]), m["label"].split()[0], m["id"]))
+        elif m := _DETAIL_HEAD.match(line):
+            op = m["id"]
+        elif op is not None and line.startswith("Arguments: "):
+            args[op] = line[len("Arguments: "):]
+    nodes = []
+    for i, (depth, name, op) in enumerate(tree):
+        below = []
+        for sub_depth, sub_name, _ in tree[i + 1:]:
+            if sub_depth <= depth:
+                break
+            below.append(sub_name)
+        nodes.append(PlanNode(name, args.get(op, ""), frozenset(below)))
+    return nodes

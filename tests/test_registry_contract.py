@@ -55,15 +55,18 @@ def test_never_graded_queries_fit_in_driver_window():
     assert not no_row_ever
 
 
-def test_every_query_has_unique_output_columns(built_queries):
+def test_every_query_has_unique_output_columns(oracle_runs):
     """Duplicate output column names would silently corrupt the
     driver's sort-by-name value compare — check every query's analyzed
-    schema for column-name uniqueness (plans shared with the scale
-    guardrails via the session-scoped built_queries cache)."""
+    schema for column-name uniqueness. Reads the columns the oracle
+    compare recorded from each built query (``oracle_runs``); a query
+    that did not build is reported too."""
     offenders = []
-    for name, df in built_queries.items():
-        cols = df.columns
-        if len(set(cols)) != len(cols):
+    for name, run in sorted(oracle_runs.items()):
+        cols = run.columns
+        if cols is None:
+            offenders.append((name, f"not built: {run.spark_error!r}"[:300]))
+        elif len(set(cols)) != len(cols):
             offenders.append((name, cols))
     assert not offenders, offenders
 

@@ -829,19 +829,27 @@ def test_cosine_topk_matches_floor_scaled_reference(spark):
 
 @pytest.mark.parametrize(
     "case",
-    ["null_vector", "null_element", "ragged"],
+    ["null_vector", "null_element", "ragged", "empty"],
 )
 def test_embedding_contract_violations_raise_named_error(spark, case):
-    """A NULL vector, a NULL element or a vector of another length must
-    fail loudly with the offending vec_id — through the top-k scorer
-    and through the threshold-pair path (dedup_embedding_cosine) —
-    instead of scoring NULL or silently dropping positions."""
-    from lambda_lakehouse_spark.operators.similarity import cosine_topk
+    """A NULL vector, a NULL element, or a vector of another length or
+    none must fail loudly with the offending vec_id — through the top-k
+    scorer and the threshold-pair path (dedup_embedding_cosine), and,
+    except for another length, through the consumers of the exploded
+    form (IVF, PQ, SemDeDup) — instead of scoring NULL or silently
+    dropping positions."""
+    from lambda_lakehouse_spark.operators.semantic import pq_encode, semdedup_verdicts
+    from lambda_lakehouse_spark.operators.similarity import (
+        _flat,
+        cosine_topk,
+        ivf_cosine_topk,
+    )
 
     bad = {
         "null_vector": None,
         "null_element": [1.0, None] + [0.5] * 62,
         "ragged": [1.0] * 63,
+        "empty": [],
     }[case]
     rows = [(0, _vec((0, 1.0)), 1), (1, _vec((1, 1.0)), 1), (7, bad, 1)]
     emb = _emb_df(spark, rows)
@@ -851,6 +859,17 @@ def test_embedding_contract_violations_raise_named_error(spark, case):
         emb.write.parquet(f"{d}/embeddings.parquet")
         with pytest.raises(Exception, match=r"EMBEDDING_CONTRACT.*vec_id=7"):
             _q("dedup_embedding_cosine").spark(spark, d).collect()
+    if case == "ragged":
+        return  # _flat accepts a corpus of any one dimension, so a short vector passes it
+    # the per-dimension consumers of _flat: IVF assignment, PQ codes,
+    # SemDeDup cells
+    for consumer in (
+        lambda: ivf_cosine_topk(emb, F.col("vec_id") == 0),
+        lambda: pq_encode(_flat(emb).select("vec_id", "pos", "val")),
+        lambda: semdedup_verdicts(emb),
+    ):
+        with pytest.raises(Exception, match=r"EMBEDDING_CONTRACT.*vec_id=7"):
+            consumer().collect()
 
 
 def test_bpe_train_merges_hand_computed(spark):

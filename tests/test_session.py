@@ -198,3 +198,35 @@ def test_read_table_uses_footer_schema_without_a_job(spark, tmp_path):
     d = read_table(spark, str(tmp_path), "d")
     assert d.schema == spark.read.parquet(str(tmp_path / "d.parquet")).schema
     assert d.count() == 3
+
+
+def test_read_table_reads_int96_timestamps_as_inference_does(spark, tmp_path):
+    """INT96 timestamps (the deprecated nanosecond encoding that older
+    writers produce) read as Spark's inference reads them: same schema,
+    same rows, and still no job to build the scan. pyarrow reports them
+    as ``timestamp[ns]``, which must not be taken for int64 nanos."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from lambda_lakehouse_spark.sources.readers import read_table
+    from tests.conftest import jobs_launched_by
+
+    pq.write_table(
+        pa.table({
+            "id": pa.array([1, 2, 3], pa.int64()),
+            "ts": pa.array(
+                [dt.datetime(2024, 1, 2, 3, 4, 5, 123456), None,
+                 dt.datetime(1969, 12, 31, 23, 59, 59)],
+                pa.timestamp("us"),
+            ),
+        }),
+        str(tmp_path / "t96.parquet"),
+        use_deprecated_int96_timestamps=True,
+    )
+    inferred = spark.read.parquet(str(tmp_path / "t96.parquet"))
+    df, jobs = jobs_launched_by(spark, lambda: read_table(spark, str(tmp_path), "t96"))
+    assert jobs == 0
+    assert df.schema == inferred.schema
+    assert sorted(df.collect()) == sorted(inferred.collect())
