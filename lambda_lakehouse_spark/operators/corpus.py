@@ -20,7 +20,7 @@ from lambda_lakehouse_spark.operators.dedup import (
 )
 from lambda_lakehouse_spark.operators.ranking import global_topk
 from lambda_lakehouse_spark.registry import register
-from lambda_lakehouse_spark.sources.readers import read_table
+from lambda_lakehouse_spark.sources.readers import local_rows, read_table
 
 # ---------------------------------------------------------------------------
 # Dedup materialization: clusters → surviving corpus
@@ -110,8 +110,8 @@ WHERE ('0x' || substr(md5('{_SAMPLE_SEED}' || CAST(d.doc_id AS VARCHAR)), 1, 7))
 )
 def sample_mixture_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "source")
-    weights = spark.createDataFrame(
-        sorted(MIXTURE_WEIGHTS_BP.items()), "source string, rate_bp int"
+    weights = local_rows(
+        spark, sorted(MIXTURE_WEIGHTS_BP.items()), "source string, rate_bp int"
     )
     bucket = (
         F.conv(

@@ -92,12 +92,12 @@ def build_scd2(
     else:
         eff_to = F.date_sub(next_from, 1)
     open_end = F.lit(OPEN_END_DATE).cast("date")
-    return (
-        versions.withColumn("effective_to", F.coalesce(eff_to, open_end))
-        .withColumn("is_current", F.col("effective_to") == open_end)
-        .withColumn("version", F.row_number().over(w_ver))
-        .drop("grp")
-    )
+    effective_to = F.coalesce(eff_to, open_end)
+    return versions.withColumns({
+        "effective_to": effective_to,
+        "is_current": effective_to == open_end,
+        "version": F.row_number().over(w_ver),
+    }).drop("grp")
 
 
 def apply_scd2_increment(

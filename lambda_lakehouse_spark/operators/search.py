@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 
 from lambda_lakehouse_spark.operators.ranking import global_topk
 from lambda_lakehouse_spark.registry import register
-from lambda_lakehouse_spark.sources.readers import read_table
+from lambda_lakehouse_spark.sources.readers import local_rows, read_table
 
 _DEC = "decimal(28,6)"
 
@@ -297,9 +297,7 @@ def phrase_search(docs: DataFrame, w1=None, w2=None) -> DataFrame:
             pairs, [F.col("c").desc(), "w1", "w2"], 1, "_rk"
         ).select("w1", "w2")
     else:
-        probe = docs.sparkSession.createDataFrame(
-            [(w1, w2)], "w1 string, w2 string"
-        )
+        probe = local_rows(docs.sparkSession, [(w1, w2)], "w1 string, w2 string")
     a = post.join(
         F.broadcast(probe), post["word"] == probe["w1"]
     ).select("doc_id", "pos")

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from lambda_lakehouse_spark.functions.scalar import dsum
 from lambda_lakehouse_spark.registry import register
-from lambda_lakehouse_spark.sources.readers import read_table
+from lambda_lakehouse_spark.sources.readers import local_rows, read_table
 
 
 _SEMI_ANTI_ORACLE = """
@@ -847,7 +847,8 @@ def join_null_safe_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", F.nullif(F.col("o_orderstatus"), F.lit("P")).alias("status_key")
     )
-    dim = spark.createDataFrame(
+    dim = local_rows(
+        spark,
         [("F", "finished"), ("O", "open"), (None, "pending-null")],
         "status_key string, status_name string",
     )

@@ -28,7 +28,7 @@ from lambda_lakehouse_spark.functions.scalar import date_sk, dsum, sk_sha256
 from lambda_lakehouse_spark.operators.scd2 import build_scd2
 from lambda_lakehouse_spark.operators.temporal import as_of_join, pit_join
 from lambda_lakehouse_spark.registry import register
-from lambda_lakehouse_spark.sources.readers import read_table
+from lambda_lakehouse_spark.sources.readers import local_rows, read_table
 
 # Shared CTE text for the SCD2 dim — the PIT oracle reuses it.
 _SCD2_CTES = """
@@ -201,7 +201,8 @@ GROUP BY fx.currency_code
     tags=("source", "join", "broadcast"),
 )
 def seed_lookup_fx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    fx = spark.createDataFrame(
+    fx = local_rows(
+        spark,
         [(0, "VND", 1.0), (1, "USD", 25000.0), (2, "JPY", 170.0)],
         "bucket int, currency_code string, rate double",
     )

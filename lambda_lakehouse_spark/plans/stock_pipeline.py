@@ -12,7 +12,8 @@ runs once every dim has landed. Each table is read back with the
 schema it was written with, never inferred (``run_pipeline_resilient``
 gives the failure order, the marker rule and the read-back schemas).
 
-Scale posture: stg is a narrow projection (no shuffle); each dim is
+Scale posture: each staging job is one filter and one projection (no
+shuffle), every derived column read from the raw columns; each dim is
 one distinct/groupBy shuffle over the stg subset of its columns; the
 fact assembly broadcasts every dim (dims are small by construction —
 days, exchanges, currencies, statuses, company versions) so the fact
@@ -23,7 +24,7 @@ semantics with errors raised, not swallowed — SURVEY G1).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -37,6 +38,7 @@ from lambda_lakehouse_spark.functions.scalar import (
 from lambda_lakehouse_spark.operators.align import align_to_contract
 from lambda_lakehouse_spark.operators.scd2 import build_scd2
 from lambda_lakehouse_spark.operators.temporal import pit_join
+from lambda_lakehouse_spark.sources.readers import local_rows
 from lambda_lakehouse_spark.sources.writer import write_partitioned
 
 # The 25-column staging contract (``utils/init_spark.py:116-131``;
@@ -139,8 +141,16 @@ FX_RATES_VND: list[tuple[str, float]] = [
     ("JPY", 170.0),
 ]
 
-def _valid_symbol():
-    return F.col("symbol").isNotNull() & (F.col("symbol") != "")
+def _stage(raw: DataFrame, symbol: Column, cols: dict[str, Column]) -> DataFrame:
+    """One staging job's plan: keep the rows whose normalized ``symbol``
+    is non-empty, derive ``cols`` from the raw columns in one
+    projection, then align to the contract. Every expression in
+    ``cols`` reads the raw columns, never another derived one."""
+    return align_to_contract(
+        raw.where(symbol.isNotNull() & (symbol != ""))
+        .withColumns({"symbol": symbol, **cols}),
+        STG_CONTRACT,
+    )
 
 
 def stg_vn(raw: DataFrame, batch_date: str) -> DataFrame:
@@ -152,87 +162,70 @@ def stg_vn(raw: DataFrame, batch_date: str) -> DataFrame:
     comes from either of two ingest-merge columns (``:87-89``);
     ``outstanding_share`` is stored in millions and scaled (G6 — the
     product stays double until the contract recasts to long).
+
+    One filter and one projection: every expression reads the raw
+    columns, so the order of the derived columns does not matter and
+    no value is cleaned twice (cleaning a cleaned double would strip
+    the 'E' of its scientific notation). ``market_cap`` therefore
+    spells out the scaled share count times the current price. The
+    reference's ``price_source`` column is not derived: the contract
+    drops it (G4).
     """
     cur = as_double_clean("ref_price")
     prev = as_double_clean("prior_close_price")
-    df = (
-        raw.withColumn("symbol", norm_sym("symbol"))
-        .where(_valid_symbol())
-        .withColumn("country", F.lit("VN"))
-        .withColumn("datadate", F.lit(batch_date).cast("date"))
-        .withColumn("sector", F.col("industry"))
-        .withColumn("employees", as_long_clean("no_employees"))
-        # current_price/price_source MUST be derived before ref_price is
-        # replaced below: `cur` references the raw "ref_price" column,
-        # and re-cleaning an already-cleaned double corrupts it (the
-        # scientific-notation 'E' of large doubles gets regex-stripped)
-        .withColumn("current_price", F.coalesce(cur, prev))
-        .withColumn(
-            "price_source",
-            F.when(cur.isNotNull(), F.lit("ref"))
-            .when(prev.isNotNull(), F.lit("prior_close"))
-            .otherwise(F.lit(None).cast("string")),
-        )
-        .withColumn("ref_price", cur)
-        .withColumn("previous_close", prev)
-        .withColumn("ceiling", as_double_clean("ceiling"))
-        .withColumn("floor", as_double_clean("floor"))
-        .withColumn("foreign_percent", as_double_clean("foreign_percent"))
-        .withColumn("delta_in_week", as_double_clean("delta_in_week"))
-        .withColumn("delta_in_month", as_double_clean("delta_in_month"))
-        .withColumn("delta_in_year", as_double_clean("delta_in_year"))
-        .withColumn("avg_match_vol_2w", as_long_clean("average_match_volume2_week"))
-        .withColumn(
-            "outstanding_share",
-            F.col("outstanding_share").cast("double") * F.lit(1_000_000),
-        )
-        .withColumn("issue_share", as_long_clean("issue_share"))
-        .withColumn(
-            "exchange", F.coalesce(F.col("exchange_overview"), F.col("exchange_price"))
-        )
-        .withColumn("currency", F.lit("VND"))
-        # price_source is computed (above) then dropped by the contract — G4
-        .withColumn(
-            "market_cap", F.col("outstanding_share") * F.col("current_price")
-        )
-    )
-    return align_to_contract(df, STG_CONTRACT)
+    current_price = F.coalesce(cur, prev)
+    shares = F.col("outstanding_share").cast("double") * F.lit(1_000_000)
+    return _stage(raw, norm_sym("symbol"), {
+        "country": F.lit("VN"),
+        "datadate": F.lit(batch_date).cast("date"),
+        "sector": F.col("industry"),
+        "employees": as_long_clean("no_employees"),
+        "current_price": current_price,
+        "ref_price": cur,
+        "previous_close": prev,
+        "ceiling": as_double_clean("ceiling"),
+        "floor": as_double_clean("floor"),
+        "foreign_percent": as_double_clean("foreign_percent"),
+        "delta_in_week": as_double_clean("delta_in_week"),
+        "delta_in_month": as_double_clean("delta_in_month"),
+        "delta_in_year": as_double_clean("delta_in_year"),
+        "avg_match_vol_2w": as_long_clean("average_match_volume2_week"),
+        "outstanding_share": shares,
+        "issue_share": as_long_clean("issue_share"),
+        "exchange": F.coalesce(F.col("exchange_overview"), F.col("exchange_price")),
+        "currency": F.lit("VND"),
+        "market_cap": shares * current_price,
+    })
 
 
 def stg_us(raw: DataFrame, batch_date: str) -> DataFrame:
     """US staging job (``us_stg_processing.py:60-89``): ``datadate``
     parsed from the data (``to_date``, ``:68``), numerics cleaned,
     exchange left NULL (``:76``)."""
-    df = (
-        raw.withColumn("symbol", norm_sym("symbol"))
-        .where(_valid_symbol())
-        .withColumn("country", F.lit("US"))
-        .withColumn("datadate", F.to_date("datadate"))
-        .withColumn("employees", as_long_clean("full_time_employees"))
-        .withColumn("market_cap", as_double_clean("market_cap"))
-        .withColumn("current_price", as_double_clean("current_price"))
-        .withColumn("previous_close", as_double_clean("previous_close"))
-        .withColumn("exchange", F.lit(None).cast("string"))
-    )
-    return align_to_contract(df, STG_CONTRACT)
+    return _stage(raw, norm_sym("symbol"), {
+        "country": F.lit("US"),
+        "datadate": F.to_date("datadate"),
+        "employees": as_long_clean("full_time_employees"),
+        "market_cap": as_double_clean("market_cap"),
+        "current_price": as_double_clean("current_price"),
+        "previous_close": as_double_clean("previous_close"),
+        "exchange": F.lit(None).cast("string"),
+    })
 
 
 def stg_jp(raw: DataFrame, batch_date: str) -> DataFrame:
     """JP staging job (``jp_stg_processing.py:60-89``): symbol from
     ``ticker`` (numeric-looking codes), exchange provided by the
     source; ``company_name_jp`` is dropped by the contract (G4)."""
-    df = (
-        raw.withColumn("symbol", norm_sym("ticker"))
-        .where(_valid_symbol())
-        .withColumn("country", F.lit("JP"))
-        .withColumn("datadate", F.to_date("datadate"))
-        .withColumn("employees", as_long_clean("employees"))
-        .withColumn("market_cap", as_double_clean("market_cap"))
-        .withColumn("current_price", as_double_clean("current_price"))
-        .withColumn("previous_close", as_double_clean("previous_close"))
-        .withColumn("currency", F.lit("JPY"))
-    )
-    return align_to_contract(df, STG_CONTRACT)
+    return _stage(raw, norm_sym("ticker"), {
+        "country": F.lit("JP"),
+        "datadate": F.to_date("datadate"),
+        "employees": as_long_clean("employees"),
+        "market_cap": as_double_clean("market_cap"),
+        "current_price": as_double_clean("current_price"),
+        "previous_close": as_double_clean("previous_close"),
+        "currency": F.lit("JPY"),
+    })
 
 
 def dim_date(stg: DataFrame) -> DataFrame:
@@ -278,9 +271,12 @@ def dim_currency(spark: SparkSession, stg: DataFrame) -> DataFrame:
     """Currency dimension (``curated/dim_currency.py:57-134``): distinct
     codes from stg, display name + FX rate attached via broadcast-joined
     seed lookups (the reference's deliberate UDF replacement, §2.9),
-    crc32 SK."""
-    names = spark.createDataFrame(CURRENCY_NAMES, ["currency_code", "currency_name"])
-    rates = spark.createDataFrame(FX_RATES_VND, ["currency_code", "fx_rate_vnd"])
+    crc32 SK. The seeds are JVM-local tables (``local_rows``), so their
+    broadcasts run no Python worker."""
+    names = local_rows(
+        spark, CURRENCY_NAMES, "currency_code string, currency_name string"
+    )
+    rates = local_rows(spark, FX_RATES_VND, "currency_code string, fx_rate_vnd double")
     base = (
         stg.select(F.col("currency").alias("currency_code"))
         .where(F.col("currency_code").isNotNull())
@@ -360,27 +356,22 @@ def fact_stock_daily(
     joins, at any fact scale."""
     f = (
         stg.where(F.col("symbol").isNotNull() & F.col("datadate").isNotNull())
-        .withColumn("date_sk", date_sk("datadate"))
-        .withColumn(
-            "pct_change",
-            F.when(
+        .withColumns({
+            "date_sk": date_sk("datadate"),
+            "pct_change": F.when(
                 F.col("previous_close").isNull() | (F.col("previous_close") == 0),
                 F.lit(None).cast("double"),
             ).otherwise(
                 (F.col("current_price") - F.col("previous_close"))
                 / F.col("previous_close")
             ),
-        )
-        .withColumn(
-            "is_limit_up",
-            (F.col("current_price").isNotNull() & F.col("ceiling").isNotNull())
-            & (F.col("current_price") >= F.col("ceiling")),
-        )
-        .withColumn(
-            "is_limit_down",
-            (F.col("current_price").isNotNull() & F.col("floor").isNotNull())
-            & (F.col("current_price") <= F.col("floor")),
-        )
+            "is_limit_up": (
+                F.col("current_price").isNotNull() & F.col("ceiling").isNotNull()
+            ) & (F.col("current_price") >= F.col("ceiling")),
+            "is_limit_down": (
+                F.col("current_price").isNotNull() & F.col("floor").isNotNull()
+            ) & (F.col("current_price") <= F.col("floor")),
+        })
     )
     # J1 — dim_date on the smart key
     f = f.join(F.broadcast(d_date.select("date_sk")), "date_sk", "left")
@@ -445,6 +436,17 @@ def fact_stock_daily(
 
 
 STG_JOBS = {"VN": stg_vn, "US": stg_us, "JP": stg_jp}
+
+
+def _read_stg(spark: SparkSession, out_dir: str) -> DataFrame:
+    """The staging table under ``out_dir``, read with the contract as its
+    schema. The contract types the partition columns too; partitioned
+    reads append them last, so the contract order is restored."""
+    return align_to_contract(
+        spark.read.schema(", ".join(f"`{c}` {t}" for c, t in STG_CONTRACT))
+        .parquet(f"{out_dir}/stg_stock"),
+        STG_CONTRACT,
+    )
 
 
 def run_pipeline(
@@ -596,13 +598,7 @@ def run_pipeline_resilient(
         ).encode()
     ).hexdigest()[:12]
 
-    # the contract types the partition columns too; partitioned reads
-    # append them last, so restore the contract order
-    stg = align_to_contract(
-        spark.read.schema(", ".join(f"`{c}` {t}" for c, t in STG_CONTRACT))
-        .parquet(f"{out_dir}/stg_stock"),
-        STG_CONTRACT,
-    )
+    stg = _read_stg(spark, out_dir)
 
     dim_builders = {
         "dim_date": lambda: dim_date(stg),

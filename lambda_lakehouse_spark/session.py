@@ -105,6 +105,16 @@ def get_spark(
         # materialize, so a few classes vary) classes; 400 still left
         # 2-8. Metaspace stayed at ~160 MB.
         .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # No Python call-site capture per Column, a static conf. PySpark
+        # 4.1 wraps every ``F.*`` / ``Column`` call in ``_with_origin``,
+        # which costs py4j round trips (active session, a conf read, an
+        # origin set and clear) plus a failing ``import IPython`` per
+        # call: 3.6-4.0 ms per ``F.col(..).cast(..).alias(..)`` with it,
+        # 1.1 ms without, and about half the py4j calls of building the
+        # stock pipeline or the query mix. Trade-off: an analysis or
+        # runtime error no longer names the Python line that built the
+        # failing expression; its error class and message are unchanged.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # split files finer than the 128 MB default: single-file tables
         # otherwise scan on one core; at cluster scale smaller splits
         # just mean more (cheap) tasks and better core utilization.

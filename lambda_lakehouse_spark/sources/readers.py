@@ -11,13 +11,17 @@ Covers SURVEY §2.1:
   the standard test tables as temp views so ``spark.sql`` works
   identically to the reference's
   ``spark.sql("select * from nessie.stg.stg_stock")``.
-- S4 local-collection source: just ``spark.createDataFrame`` — used by
-  the currency lookup seed (see plans/star.py).
+- S4 local-collection source: ``local_rows`` turns Python rows and a
+  DDL schema into a JVM ``LocalRelation`` (through a pyarrow table),
+  so a seed lookup plans no Python-row RDD and runs no Python worker.
+  Every seed table goes through it (the stock pipeline's currency
+  names and FX rates, plans/star.py's FX lookup, and others).
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -71,6 +75,26 @@ def spread_if_narrow(df: DataFrame, key: str | None) -> DataFrame:
     if files and len(files) < n_parts:
         return df.repartition(n_parts) if key is None else df.repartition(n_parts, key)
     return df
+
+
+def local_rows(spark: SparkSession, rows: Iterable[tuple], ddl: str) -> DataFrame:
+    """A small in-memory table (S4) with the schema ``ddl`` (for
+    example ``"code string, rate double"``), planned as a JVM
+    ``LocalRelation``.
+
+    ``spark.createDataFrame`` of a Python list plans a Python-row RDD,
+    so every job that reads it (a broadcast of a seed lookup, say)
+    runs its tasks on Python workers. A pyarrow table built to the DDL
+    types goes to the JVM as Arrow data instead; NULLs and the declared
+    types survive as given."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = T.StructType.fromDDL(ddl)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, row)) for row in rows], to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def read_csv_raw(

@@ -262,6 +262,15 @@ def test_align_contract_types_and_order(spark):
     assert row.a == "a" and row.b == 1 and row.c is None
 
 
+def test_align_contract_quotes_column_names(spark):
+    """The contract projection is SQL text: names with a space or a
+    backtick are quoted, on the source and the output side."""
+    df = spark.createDataFrame([("v", 3)], "`we``ird` string, `a b` int")
+    out = align_to_contract(df, [("a b", "bigint"), ("we`ird", "string"), ("n`", "int")])
+    assert out.columns == ["a b", "we`ird", "n`"]
+    assert tuple(out.first()) == (3, "v", None)
+
+
 def test_union_by_name_missing_columns(spark):
     d1 = spark.createDataFrame([(1, "x")], "id int, a string")
     d2 = spark.createDataFrame([(2, 9.9)], "id int, b double")
@@ -721,6 +730,24 @@ def test_bm25_topk_caps_per_query(spark):
         by_q.setdefault(r.query_id, []).append(r.rank)
     for q, rks in by_q.items():
         assert sorted(rks) == list(range(1, len(rks) + 1))
+
+
+def test_phrase_search_given_phrase_matches_the_mined_one(spark):
+    """An explicit phrase (a one-row local probe) finds what the
+    self-mined probe finds when both name the corpus's top bigram."""
+    from collections import Counter
+
+    from lambda_lakehouse_spark.operators.search import phrase_search
+    from lambda_lakehouse_spark.sources.readers import read_table
+    from tests.conftest import SF_DIR
+
+    docs = read_table(spark, SF_DIR, "documents").select("doc_id", "text")
+    pairs = Counter(
+        p for r in docs.collect() for ws in [r.text.split(" ")] for p in zip(ws, ws[1:])
+    )
+    (w1, w2), _ = min(pairs.items(), key=lambda kv: (-kv[1], kv[0]))
+    given = phrase_search(docs, w1, w2).collect()
+    assert given and sorted(given) == sorted(phrase_search(docs).collect())
 
 
 def test_grouped_prefix_sum_rank_equals_window(spark):

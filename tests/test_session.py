@@ -75,6 +75,27 @@ def test_default_cpus_follow_affinity_unless_overridden(monkeypatch, recorded_co
     assert recorded_conf["spark.sql.shuffle.partitions"] == "3"
 
 
+def test_column_calls_capture_no_call_site(recorded_conf):
+    """The factory turns off PySpark's per-Column call-site capture
+    (a static conf, so it must be set on the builder)."""
+    session.get_spark()
+    assert recorded_conf["spark.python.sql.dataFrameDebugging.enabled"] == "false"
+
+
+def test_runtime_error_keeps_its_error_class(spark):
+    """Without call-site capture an ANSI runtime error still raises with
+    its error class and message."""
+    from pyspark.errors import ArithmeticException
+    from pyspark.sql import functions as F
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    df = spark.range(1).select((F.lit(1) / F.col("id")).alias("q"))
+    with pytest.raises(ArithmeticException) as err:
+        df.collect()
+    assert err.value.getCondition() == "DIVIDE_BY_ZERO"
+    assert "Division by zero" in str(err.value)
+
+
 def test_bigint_sum_overflow_raises_under_ansi(spark):
     """The floor-scaled oracle sums (similarity._ssum_sql) rely on Spark
     raising, not wrapping, when SUM(BIGINT) passes 2^63. If the ANSI
